@@ -233,12 +233,13 @@ def arc_knn(points: DataFrame, k: int, lon: str = "lon", lat: str = "lat",
     Chord distance is monotone in arc distance, so euclidean kNN on the
     3-D embedding gives the arc kNN exactly (cg/kdtree.py:90 Arc_KDTree).
 
-    Scale shape — the same ring expansion as the planar knn_table
-    (operators/distance.py:129), on (lon, lat) degree cells with the lon
-    axis WRAPPED at the antimeridian (cyclic cell index). Resolution
-    guarantee per focal at latitude φ after searching Chebyshev ring r of
-    cell size s: any point outside the ring differs by > r·s degrees in lat
-    or in (cyclic) lon, so its chord is at least
+    Scale shape — the build runs the planar kNN's ring-expansion core
+    (``operators.distance._ring_knn``) on (lon, lat) degree cells, with the
+    lon axis WRAPPED at the antimeridian (cyclic cell index) and the chord
+    as the distance. Resolution guarantee per focal at latitude φ after
+    searching Chebyshev ring r of cell size s: any point outside the ring
+    differs by > r·s degrees in lat or in (cyclic) lon, so its chord is at
+    least
 
         g(φ) = 2·sin(r·s/2 rad) · sqrt(max(0, cos φ · cos(min(|φ|+r·s, 90°))))
 
@@ -246,18 +247,23 @@ def arc_knn(points: DataFrame, k: int, lon: str = "lon", lat: str = "lat",
     lat-only case is never smaller). A focal is resolved when its kth chord
     is <= g; near the poles g → 0, so polar foci simply fall through to the
     tiny broadcast brute-force residue — exactness never depends on the grid.
-    """
-    from pyspark.sql import Window
 
+    Rounds run only while r < nlon // 2, which keeps 2r+1 <= nlon: the ring
+    never wraps onto itself, so no two lon offsets alias to one cell and
+    every unordered pair of cells within the ring meets on exactly one key
+    of the half ring. Round 1 therefore joins over the half ring and
+    mirrors, like the planar build, and holds each focal to its own g(φ)
+    after the mirror.
+    """
     from libpysal_spark.graph import Graph, resolve_isolates
+    from libpysal_spark.operators.distance import _ring_knn
+    from libpysal_spark.tiling import pack_cell
 
     pts = with_xyz(
         points.select("id", F.col(lon).alias("lon"), F.col(lat).alias("lat"))
     )
     n = pts.count()
     if cell_deg is None:
-        import math
-
         # quasi-uniform over the sphere: expected kth-NN angular distance
         # ~ sqrt((k+1)·globe_area_deg² / (π·n)); ring 1 should cover ~1.6×.
         area_deg2 = 360.0 * 180.0
@@ -270,110 +276,26 @@ def arc_knn(points: DataFrame, k: int, lon: str = "lon", lat: str = "lat",
     # ring-resolution guarantee near the wrap. Shrinking s to 360/nlon
     # keeps the guarantee exact (g uses the SAME s as the grid).
     s = 360.0 / nlon
+    tagged = pts.withColumn(
+        "cell_x", F.floor((F.col("lon") + 180.0) / F.lit(s))
+    ).withColumn("cell_y", F.floor((F.col("lat") + 90.0) / F.lit(s)))
 
-    cx = F.pmod(F.floor((F.col("lon") + 180.0) / F.lit(s)), F.lit(nlon))
-    cy = F.floor((F.col("lat") + 90.0) / F.lit(s))
-    all_pts = pts.withColumn("cx", cx).withColumn("cy", cy).localCheckpoint()
-    right = all_pts.select(
-        F.col("id").alias("neighbor"),
-        F.col("x3").alias("bx"), F.col("y3").alias("by"), F.col("z3").alias("bz"),
-        (F.col("cx") * F.lit(100_000) + F.col("cy")).alias("cell_r"),
-    )
-
-    resolved_parts = []
-    unresolved = all_pts
-    n_unresolved = n
-    r = initial_ring
-    import math as _m
-
-    for _ in range(max_rounds):
-        if n_unresolved == 0 or r >= nlon // 2:
-            break
-        offs = F.expr(
-            f"flatten(transform(sequence(-{r}, {r}), dx -> "
-            f"transform(sequence(-{r}, {r}), dy -> struct(dx, dy))))"
-        )
-        probes = (
-            unresolved.withColumn("__o", F.explode(offs))
-            .withColumn("pcx", F.pmod(F.col("cx") + F.col("__o.dx"), F.lit(nlon)))
-            .withColumn("pcy", F.col("cy") + F.col("__o.dy"))
-            .select(
-                F.col("id").alias("focal"),
-                F.col("lat").alias("lat_f"),
-                F.col("x3").alias("ax"), F.col("y3").alias("ay"), F.col("z3").alias("az"),
-                (F.col("pcx") * F.lit(100_000) + F.col("pcy")).alias("cell_probe"),
-            )
-            .distinct()  # wrap can alias two offsets to one cell
-        )
-        cand = (
-            probes.join(right, probes.cell_probe == right.cell_r)
-            .filter(F.col("focal") != F.col("neighbor"))
-            .withColumn("chord", _chord())
-        )
+    def guarantee(r: int) -> Column:
         rs = float(r) * s
-        half = _m.radians(min(rs, 180.0)) / 2.0
-        guarantee = (
-            F.lit(2.0 * _m.sin(half))
-            * F.sqrt(
-                F.greatest(
-                    F.cos(F.radians(F.col("lat_f")))
-                    * F.cos(F.radians(F.least(F.abs(F.col("lat_f")) + F.lit(rs), F.lit(90.0)))),
-                    F.lit(0.0),
-                )
+        phi = F.col("lat_f")
+        return F.lit(2.0 * math.sin(math.radians(min(rs, 180.0)) / 2.0)) * F.sqrt(
+            F.greatest(
+                F.cos(F.radians(phi))
+                * F.cos(F.radians(F.least(F.abs(phi) + F.lit(rs), F.lit(90.0)))),
+                F.lit(0.0),
             )
-        )
-        wnd = Window.partitionBy("focal").orderBy("chord", "neighbor")
-        topk = (
-            cand.withColumn("__rk", F.row_number().over(wnd))
-            .filter(F.col("__rk") <= k)
-            .withColumn(
-                "__ok",
-                F.max(F.when(F.col("__rk") == k, F.col("chord"))).over(
-                    Window.partitionBy("focal")
-                )
-                <= guarantee,
-            )
-        ).persist()
-        resolved_parts.append(
-            topk.filter(F.col("__ok")).select("focal", "neighbor", "chord").localCheckpoint()
-        )
-        ok_ids = topk.filter(F.col("__ok")).select(F.col("focal").alias("id")).distinct()
-        unresolved = unresolved.join(ok_ids, "id", "left_anti").localCheckpoint()
-        n_unresolved = unresolved.count()
-        topk.unpersist()
-        r *= 2
-
-    if n_unresolved > 0:
-        left = F.broadcast(
-            unresolved.select(
-                F.col("id").alias("focal"),
-                F.col("x3").alias("ax"), F.col("y3").alias("ay"), F.col("z3").alias("az"),
-            )
-        )
-        cand = (
-            left.crossJoin(
-                pts.select(
-                    F.col("id").alias("neighbor"),
-                    F.col("x3").alias("bx"), F.col("y3").alias("by"), F.col("z3").alias("bz"),
-                )
-            )
-            .filter(F.col("focal") != F.col("neighbor"))
-            .withColumn("chord", _chord())
-        )
-        wnd = Window.partitionBy("focal").orderBy("chord", "neighbor")
-        resolved_parts.append(
-            cand.withColumn("__rk", F.row_number().over(wnd))
-            .filter(F.col("__rk") <= k)
-            .select("focal", "neighbor", "chord")
         )
 
-    if not resolved_parts:
-        out = points.sparkSession.createDataFrame(
-            [], "focal long, neighbor long, chord double"
-        )
-    else:
-        out = resolved_parts[0]
-        for p in resolved_parts[1:]:
-            out = out.unionByName(p)
-    edges = out.select("focal", "neighbor").withColumn("weight", F.lit(1.0))
+    tbl, _ = _ring_knn(
+        tagged, n, k, ("x3", "y3", "z3", "lat"),
+        lambda cx, cy: pack_cell(F.pmod(cx, F.lit(nlon)), cy),
+        _chord("x3_f", "y3_f", "z3_f", "x3_n", "y3_n", "z3_n"),
+        guarantee, initial_ring, max_rounds, ring_cap=nlon // 2,
+    )
+    edges = tbl.select("focal", "neighbor").withColumn("weight", F.lit(1.0))
     return Graph(resolve_isolates(edges, points.select("id")))

@@ -119,8 +119,9 @@ def resolve_isolates(edges: DataFrame, ids: DataFrame, persist: bool = True) -> 
     computes the upstream join twice. ``persist=True`` cuts the subtree with
     a LAZY local checkpoint: the first action materializes it once, both
     branches read the same blocks, and the blocks are reclaimed by Spark's
-    context cleaner when the last derived plan is garbage-collected — on a
-    cluster this becomes a reliable checkpoint to storage.
+    context cleaner when the last derived plan is garbage-collected. The
+    blocks are executor-local, not a reliable checkpoint: they are lost with
+    their executor, and a job that still needs them then fails.
 
     r6: this replaces the r2-era ``persist()`` pinned to the owning Graph's
     lifetime. In the ubiquitous ``Graph(...).edges`` pattern the temporary

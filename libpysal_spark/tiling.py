@@ -111,12 +111,6 @@ def ensure_min_parallelism(
     return df.repartition(parts, *[F.col(c) for c in df.columns])
 
 
-def cell_coord(coord: Column | str, size: float) -> Column:
-    """1-D cell index: floor(coord / size), as long."""
-    c = F.col(coord) if isinstance(coord, str) else coord
-    return F.floor(c / F.lit(float(size)))
-
-
 def pack_cell(cx: Column, cy: Column) -> Column:
     """Pack two signed cell indices into one int64 join key."""
     return (
@@ -136,37 +130,3 @@ def with_cells(
         .withColumn(f"{prefix}_y", cy)
         .withColumn(prefix, pack_cell(F.col(f"{prefix}_x"), F.col(f"{prefix}_y")))
     )
-
-
-def ring_offsets(spark, r: int) -> DataFrame:
-    """DataFrame of (dx, dy) offsets covering the (2r+1)^2 Chebyshev ball.
-
-    Used to explode ONE side of a candidate join so each nearby pair meets on
-    exactly one cell key (no dedup needed afterwards).
-    """
-    return spark.range(-r, r + 1).selectExpr("id as dx").crossJoin(
-        spark.range(-r, r + 1).selectExpr("id as dy")
-    )
-
-
-def explode_to_ring(df: DataFrame, r: int, prefix: str = "cell") -> DataFrame:
-    """Replicate each row to its (2r+1)^2 neighboring cells.
-
-    Adds column ``{prefix}_probe`` — the packed cell of each (own + shifted)
-    position. Joining ``probe == other.{prefix}`` yields every pair within
-    Chebyshev cell distance r, exactly once.
-
-    Implemented as a sequence expression + explode (native, no shuffle).
-    """
-    offs = F.expr(
-        f"flatten(transform(sequence(-{r}, {r}), dx -> "
-        f"transform(sequence(-{r}, {r}), dy -> struct(dx, dy))))"
-    )
-    out = df.withColumn("__off", F.explode(offs))
-    return out.withColumn(
-        f"{prefix}_probe",
-        pack_cell(
-            F.col(f"{prefix}_x") + F.col("__off.dx"),
-            F.col(f"{prefix}_y") + F.col("__off.dy"),
-        ),
-    ).drop("__off")

@@ -201,6 +201,89 @@ def test_arc_knn_quarter_circumference(spark):
     assert n[1] == {0, 3}
 
 
+def test_arc_knn_matches_bruteforce_across_wrap_and_poles(spark, monkeypatch):
+    """Seeded arc kNN vs a numpy brute force: chord distance on the unit
+    sphere, ties broken by (chord, id). Points straddle ±180° lon, some sit
+    above |lat| 85° (where the ring guarantee vanishes, so they reach the
+    residue), and a coincident cluster forces id tie-breaks."""
+    from libpysal_spark.operators import distance as D
+
+    rng = np.random.default_rng(7)
+    lon = np.concatenate([
+        rng.uniform(-180, 180, 60),
+        rng.uniform(176, 180, 15),
+        rng.uniform(-180, -176, 15),
+        rng.uniform(-180, 180, 10),
+        np.full(5, 31.5),
+    ])
+    lat = np.concatenate([
+        rng.uniform(-80, 80, 60),
+        rng.uniform(-30, 30, 30),
+        np.concatenate([rng.uniform(85.5, 89.9, 5), rng.uniform(-89.9, -85.5, 5)]),
+        np.full(5, -12.25),
+    ])
+    ids = np.arange(len(lon)) * 3 + 1
+    pts = spark.createDataFrame(
+        [(int(i), float(a), float(b)) for i, a, b in zip(ids, lon, lat)],
+        "id long, lon double, lat double",
+    )
+    infos = []
+    core = D._ring_knn
+
+    def spy(*a, **kw):
+        out = core(*a, **kw)
+        infos.append(out[1])
+        return out
+
+    monkeypatch.setattr(D, "_ring_knn", spy)
+    k = 4
+    got = _nbrs(arc_knn(pts, k, cell_deg=5.0))
+    assert infos[0]["rounds"] >= 2 and infos[0]["residue"] > 0
+
+    la, lo = np.radians(lat), np.radians(lon)
+    xyz = np.stack([np.cos(la) * np.cos(lo), np.cos(la) * np.sin(lo), np.sin(la)], 1)
+    chord = np.sqrt(((xyz[:, None, :] - xyz[None, :, :]) ** 2).sum(-1))
+    for i, fid in enumerate(ids):
+        order = sorted((chord[i, j], ids[j]) for j in range(len(ids)) if j != i)
+        assert got[fid] == {int(n) for _, n in order[:k]}, fid
+
+
+def test_knn_isolate_gate_is_per_call_under_threads(spark):
+    """A 1-point knn keeps its zero-weight self-loop while another thread
+    builds adaptive kernels (the isolate gate reads this call's own point
+    count, not another call's)."""
+    import threading
+
+    from libpysal_spark.operators.distance import knn
+
+    one = spark.createDataFrame([(7, 0.5, 0.5)], "id long, x double, y double")
+    rng = np.random.default_rng(3)
+    many = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(rng.random((200, 2)) * 50)],
+        "id long, x double, y double",
+    )
+    stop = threading.Event()
+    errors = []
+
+    def kernels():
+        try:
+            while not stop.is_set():
+                adaptive_kernel(many, 5).edges.count()
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    t = threading.Thread(target=kernels)
+    t.start()
+    try:
+        for _ in range(8):
+            rows = [tuple(r) for r in knn(one, 3).edges.collect()]
+            assert rows == [(7, 7, 0.0)]
+    finally:
+        stop.set()
+        t.join()
+    assert not errors
+
+
 def test_haversine_half_circumference(spark):
     df = spark.createDataFrame([(0.0, 0.0, 180.0, 0.0)], "lon1 double, lat1 double, lon2 double, lat2 double")
     d = df.select(haversine_expr(F.col("lon1"), F.col("lat1"), F.col("lon2"), F.col("lat2")).alias("d")).first().d

@@ -135,28 +135,6 @@ def test_nonplanar_plan_broadcasts_islands(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_bucketed_edge_table_joins_without_shuffle(spark, tmp_path):
-    """bucketBy(focal) storage: the lag aggregate reads the bucketed scan's
-    hash distribution — no Exchange on the edge side (one fewer shuffle than
-    the unbucketed plan)."""
-    from libpysal_spark.operators.distance import distance_band
-    from libpysal_spark.plans.bucketing import bucketed_lag, write_bucketed
-
-    g = distance_band(document_points(spark, SF), 20.0)
-    y = document_points(spark, SF).select("id", F.col("x").alias("y"))
-
-    unbucketed_plan = _formatted(g.lag(y))
-    assert unbucketed_plan.count("hashpartitioning(focal") == 1  # the agg shuffle
-
-    write_bucketed(g, "edges_bucketed_test", buckets=8)
-    try:
-        plan = _formatted(bucketed_lag(spark, "edges_bucketed_test", y))
-        assert "Bucketed: true" in plan
-        assert plan.count("hashpartitioning(focal") == 0  # shuffle pre-paid
-    finally:
-        spark.sql("DROP TABLE IF EXISTS edges_bucketed_test")
-
-
 def test_filter_pushdown_reaches_scan(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     plan = _formatted(docs.filter(F.col("doc_id") < 100).select("doc_id", "lang"))
