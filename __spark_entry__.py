@@ -1245,8 +1245,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["cardinality_histogram"] = _hist
 
-    # --- temporal tile rollup over the events stream table (batch form of
-    # streaming/ingest.tile_rollup_stream) ---
+    # --- temporal tile rollup over the events table: hourly counts per tile ---
     def _rollup(s, d):
         ev = s.read.parquet(f"{d}/events.parquet")
         x, y = geocode_exprs("user_id")
@@ -2586,7 +2585,7 @@ WHERE cosine > 0.35 ORDER BY doc_a, doc_b"""
 
     # SRP-LSH candidates replayed bit-for-bit: the pseudo-plane component for
     # (table t, plane p, dim d) is the SAME hash arithmetic as
-    # text/ann.py:srp_buckets — ((p*1000003 + d*7919 + seed_t)*2654435761 %
+    # text/ann.py:_srp_bucket_col — ((p*1000003 + d*7919 + seed_t)*2654435761 %
     # 1e6)/5e5 - 1 with seed_t = SRP_SEED + 101*t — so candidate sets (and the
     # exact-rescored output) are engine-invariant.
     o["embedding_near_dup_srp"] = f"""

@@ -60,18 +60,6 @@ def with_xyz(df: DataFrame, lon: str = "lon", lat: str = "lat") -> DataFrame:
     return df.withColumn("x3", x).withColumn("y3", y).withColumn("z3", z)
 
 
-def lonlat_points_planar(df: DataFrame, lon: str = "lon", lat: str = "lat") -> DataFrame:
-    """(id, x, y) projection of XYZ for the 2-D grid machinery.
-
-    For kNN/bands on the sphere we need a 3-D index; with web-scale data away
-    from the poles, a 2-D grid on (lon, lat) scaled by cos(mid-lat) prunes
-    correctly when the candidate radius is inflated by the projection bound.
-    Exact filtering always happens on the true chord/haversine column — the
-    grid only generates candidates.
-    """
-    return df.select("id", F.col(lon).alias("x"), F.col(lat).alias("y"))
-
-
 def geointerpolate_cols(
     lon0: Column, lat0: Column, lon1: Column, lat1: Column, t: Column
 ) -> tuple[Column, Column]:
@@ -227,7 +215,7 @@ def arc_distance_band(
 
 def arc_knn(points: DataFrame, k: int, lon: str = "lon", lat: str = "lat",
             radius: float = EARTH_RADIUS_KM, cell_deg: float | None = None,
-            initial_ring: int = 1, max_rounds: int = 4):
+            max_rounds: int = 4):
     """kNN under the great-circle metric via the XYZ-chord trick.
 
     Chord distance is monotone in arc distance, so euclidean kNN on the
@@ -295,7 +283,7 @@ def arc_knn(points: DataFrame, k: int, lon: str = "lon", lat: str = "lat",
         tagged, n, k, ("x3", "y3", "z3", "lat"),
         lambda cx, cy: pack_cell(F.pmod(cx, F.lit(nlon)), cy),
         _chord("x3_f", "y3_f", "z3_f", "x3_n", "y3_n", "z3_n"),
-        guarantee, initial_ring, max_rounds, ring_cap=nlon // 2,
+        guarantee, max_rounds, ring_cap=nlon // 2,
     )
     edges = tbl.select("focal", "neighbor").withColumn("weight", F.lit(1.0))
     return Graph(resolve_isolates(edges, points.select("id")))

@@ -215,12 +215,11 @@ def knn(
     points: DataFrame,
     k: int,
     cell_size: float | None = None,
-    initial_ring: int = 1,
     max_rounds: int = 5,
     p: float = 2.0,
 ) -> Graph:
     """K nearest neighbors, self excluded, binary weights."""
-    tbl, info = _planar_knn(points, k, cell_size, initial_ring, max_rounds, p)
+    tbl, info = _planar_knn(points, k, cell_size, max_rounds, p)
     edges = tbl.select("focal", "neighbor").withColumn("weight", F.lit(1.0))
     # r6: with n >= 2 points every focal resolves with >= 1 neighbor (ring
     # rounds guarantee >= k, the residue top-k of a non-empty cross join
@@ -246,7 +245,6 @@ def knn_table(
     points: DataFrame,
     k: int,
     cell_size: float | None = None,
-    initial_ring: int = 1,
     max_rounds: int = 5,
     p: float = 2.0,
     with_bw: bool = False,
@@ -280,14 +278,13 @@ def knn_table(
     through deterministically, which matches the reference's 'clique'-style
     inclusion when k accommodates them.
     """
-    return _planar_knn(points, k, cell_size, initial_ring, max_rounds, p, with_bw)[0]
+    return _planar_knn(points, k, cell_size, max_rounds, p, with_bw)[0]
 
 
 def _planar_knn(
     points: DataFrame,
     k: int,
     cell_size: float | None = None,
-    initial_ring: int = 1,
     max_rounds: int = 5,
     p: float = 2.0,
     with_bw: bool = False,
@@ -320,7 +317,7 @@ def _planar_knn(
     s = float(cell_size)
     tbl, info = _ring_knn(
         with_cells(pts, s), int(n), k, ("x", "y"), pack_cell, _dist(p),
-        lambda r: float(r) * s, initial_ring, max_rounds, with_bw=with_bw,
+        lambda r: float(r) * s, max_rounds, with_bw=with_bw,
     )
     info["cell_size"] = s
     global last_knn_info
@@ -336,7 +333,6 @@ def _ring_knn(
     key,
     dist: F.Column,
     guarantee,
-    r: int,
     max_rounds: int,
     ring_cap: int | None = None,
     with_bw: bool = False,
@@ -348,8 +344,8 @@ def _ring_knn(
     ``dist`` reads the _f / _n copies of ``cols``; ``guarantee(r)`` is the
     radius within which ring ``r`` has seen every point — a float (planar
     r·s) or a Column over the focal's _f columns (arc, per latitude). Rounds
-    run while r < ``ring_cap``. Returns the (focal, neighbor, dist[, __bw])
-    table and {"rounds", "residue", "n"}.
+    start at ring 1, double it, and run while r < ``ring_cap``. Returns the
+    (focal, neighbor, dist[, __bw]) table and {"rounds", "residue", "n"}.
 
     Each round pre-filters candidates to the guarantee radius: a focal only
     resolves when its kth neighbor is within it, and for such foci the top-k
@@ -366,6 +362,7 @@ def _ring_knn(
     tops: list[DataFrame] = []
     unresolved = tagged
     n_unresolved = n
+    r = 1
     rounds = 0
     while rounds < max_rounds and n_unresolved > 0 and (ring_cap is None or r < ring_cap):
         cand = _ring_pairs(
@@ -459,6 +456,12 @@ def adaptive_kernel(
     bandwidth resolution — ``fixed=True``: one global bandwidth =
     eps * max kth-NN distance; ``fixed=False`` (adaptive): per-point
     bandwidth = own kth-NN distance.
+
+    Known deviation: the adaptive bandwidth is the raw kth-NN distance. The
+    reference's ``_set_bw`` also multiplies the adaptive bandwidths by
+    ``eps``, so its kernel values differ from these in the last digits; a
+    neighbor at exactly the kth distance gets kernel(1) here, kernel(1/eps)
+    there. ``eps`` applies to ``fixed=True`` only.
 
     Candidates = the (k)-NN table itself (the reference evaluates the kernel
     over the same kNN candidate structure); the adaptive bandwidth comes off

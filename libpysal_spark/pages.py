@@ -71,25 +71,11 @@ def pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def geocoded_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pages + (x, y) point columns — the spatial-join input."""
-    p = pages(spark, sf_dir)
-    x, y = geocode_exprs("doc_id")
-    return p.withColumn("x", x).withColumn("y", y)
-
-
 def document_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, x, y) point table for the weights builders."""
     docs = load_documents(spark, sf_dir)
     x, y = geocode_exprs("doc_id")
     return docs.select(F.col("doc_id").alias("id"), x.alias("x"), y.alias("y"))
-
-
-def points_sql_cte(limit: int | None = None) -> str:
-    """DuckDB CTE producing the identical (id, x, y) point table."""
-    xs, ys = geocode_sql("doc_id")
-    lim = f"WHERE doc_id < {limit}" if limit is not None else ""
-    return f"SELECT doc_id AS id, {xs} AS x, {ys} AS y FROM documents {lim}"
 
 
 def extract_text(html_col: str = "html") -> F.Column:

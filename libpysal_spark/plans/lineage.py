@@ -134,8 +134,3 @@ def verify(spark: SparkSession, path: str) -> dict:
         else:
             out[k] = "mismatch"
     return out
-
-
-def tile_bucket(col: str, buckets: int = 64):
-    """Stable partition key from any integer id column (pmod keeps it dense)."""
-    return F.pmod(F.col(col), F.lit(buckets)).cast("int")

@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from libpysal_spark.graph import Graph, resolve_isolates
-
 
 def salted_self_join(
     labels: DataFrame,
@@ -46,17 +44,4 @@ def salted_self_join(
         a.join(b, ["__k", "__salt"])
         .filter(F.col("focal") != F.col("neighbor"))
         .select("focal", "neighbor")
-    )
-
-
-def block_weights_salted(
-    labels: DataFrame, id_col: str = "id", label_col: str = "regime", salt: int = 8
-) -> Graph:
-    """Skew-hardened block weights — identical output to
-    operators.contiguity.block_weights (weights/util.py:235-294)."""
-    pairs = salted_self_join(labels, label_col, id_col, salt).withColumn(
-        "weight", F.lit(1.0)
-    )
-    return Graph(
-        resolve_isolates(pairs, labels.select(F.col(id_col).alias("id")))
     )

@@ -229,21 +229,6 @@ def _srp_bucket_col(vec_col: str, num_planes: int, seed: int) -> F.Column:
     )
 
 
-def srp_buckets(
-    vectors: DataFrame,
-    num_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
-) -> DataFrame:
-    """(vec_id, bucket) sign-random-projection LSH bucket (see
-    :func:`_srp_bucket_col`)."""
-    return vectors.select(
-        F.col(id_col).alias("vec_id"),
-        _srp_bucket_col(vec_col, num_planes, seed).alias("bucket"),
-    )
-
-
 def srp_buckets_multi(
     vectors: DataFrame,
     num_planes: int,
@@ -510,7 +495,7 @@ def srp_threshold_pairs(
     Returns (doc_a, doc_b, cosine) for pairs that (a) collide in at least
     one of ``num_tables`` SRP tables and (b) have round(cosine, 6) >
     threshold. The bucket planes are the *deterministic hash-derived*
-    pseudo-planes of :func:`srp_buckets`, so the candidate set — and hence
+    pseudo-planes of :func:`_srp_bucket_col`, so the candidate set — and hence
     the full output — is replayable bit-for-bit by any engine (the DuckDB
     oracle recomputes the same buckets; same precedent as knn_jitter's
     md5-replayed RNG).
@@ -556,60 +541,4 @@ def srp_threshold_pairs(
         .withColumn("cosine", F.round(_cosine_prenormed("__a", "__b", "__na", "__nb"), 6))
         .filter(F.col("cosine") > F.lit(float(threshold)))
         .select("doc_a", "doc_b", "cosine")
-    )
-
-
-def ann_topk_lsh(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    num_planes: int = 8,
-    num_tables: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: multi-table SRP LSH.
-
-    Classic L-table construction (Indyk-Motwani): each table hashes with its
-    own ``num_planes`` hyperplanes; candidates are the union over tables of
-    same-bucket pairs, then scored exactly and top-k'd. Recall grows as
-    1 - (1 - p^b)^L. One shuffle per table on the (table, bucket) key; the
-    exact rescoring only touches candidates, never the full corpus.
-    """
-
-    # lazy checkpoints (r6 third pass): same base-projection cut as
-    # srp_threshold_pairs / ivf_topk — each source is scanned once, not once
-    # per consumer (bucket table + rescore side)
-    corpus = corpus.select(id_col, vec_col).localCheckpoint(eager=False)
-    queries = queries.select(id_col, vec_col).localCheckpoint(eager=False)
-
-    def tagged(df: DataFrame, role: str) -> DataFrame:
-        return srp_buckets_multi(
-            df, num_planes, id_col, vec_col,
-            [7 + 101 * t for t in range(num_tables)],
-        ).withColumnRenamed("vec_id", role)
-
-    cb = tagged(corpus, "neighbor_id")
-    qb = tagged(queries, "query_id")
-    cand = (
-        qb.join(cb, ["tbl", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    q = F.broadcast(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-        .withColumn("__qn", _norm("__qv"))
-    )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")).withColumn(
-        "__cn", _norm("__cv")
-    )
-    scored = cand.join(q, "query_id").join(c, "neighbor_id").withColumn(
-        "cosine", F.round(_cosine_prenormed("__qv", "__cv", "__qn", "__cn"), 6)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
     )

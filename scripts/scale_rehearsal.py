@@ -130,13 +130,9 @@ def main():
         out["results"]["distance_band_build"]["balance"] = partition_balance(
             _band_g["g"].edges
         )
-        _band_g["g"].unpersist()
 
     def _knn():
-        g = knn(orders, 10)
-        n = g.edges.count()
-        g.unpersist()
-        return n
+        return knn(orders, 10).edges.count()
 
     run("knn10_build", _knn, lambda: dict(DIST.last_knn_info))
 
@@ -171,9 +167,7 @@ def main():
 
     def _components():
         g = distance_band(customer, 20.0 / SQ)
-        n = g.component_labels().select("component").distinct().count()
-        g.unpersist()
-        return n
+        return g.component_labels().select("component").distinct().count()
 
     run(
         "connected_components",

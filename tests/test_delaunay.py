@@ -75,7 +75,7 @@ def test_delaunay_partitioned_matches_exact(spark):
     rows = _pts(200, seed_mult=211, mod1=997, mod2=991)
     pts = spark.createDataFrame(rows, "id long, x double, y double")
     exact = _real(delaunay(pts, cells_per_side=1))
-    parted = _real(delaunay(pts, cells_per_side=3, halo_cells=1))
+    parted = _real(delaunay(pts, cells_per_side=3))
     # halo covers local circumradii + hull ghosts repair long edges -> exact
     assert parted == exact
 
@@ -86,7 +86,7 @@ def test_delaunay_partitioned_never_spurious(spark):
     rows = _pts(1000, seed_mult=211, mod1=997, mod2=991)
     pts = spark.createDataFrame(rows, "id long, x double, y double")
     exact = _real(delaunay(pts, cells_per_side=1))
-    parted = _real(delaunay(pts, cells_per_side=4, halo_cells=1))
+    parted = _real(delaunay(pts, cells_per_side=4))
     assert parted - exact == set()
     assert len(exact - parted) <= max(1, len(exact) // 200)  # <=0.5% missing
 

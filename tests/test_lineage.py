@@ -8,9 +8,7 @@ from pyspark.sql import functions as F
 
 from libpysal_spark.operators.distance import distance_band
 from libpysal_spark.pages import document_points
-from libpysal_spark.plans.lineage import (
-    load_manifest, tile_bucket, verify, write_with_lineage,
-)
+from libpysal_spark.plans.lineage import verify, write_with_lineage
 
 SF = "/root/testdata/sf0.001"
 
@@ -18,7 +16,9 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def edges(spark):
     g = distance_band(document_points(spark, SF), 30.0)
-    return g.edges.withColumn("bucket", tile_bucket("focal", 8)).persist()
+    return g.edges.withColumn(
+        "bucket", F.pmod(F.col("focal"), F.lit(8)).cast("int")
+    ).persist()
 
 
 def test_write_verify_resume(spark, edges, tmp_path):

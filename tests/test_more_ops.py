@@ -356,6 +356,25 @@ def test_component_labels_driver_gate_matches_distributed(spark):
     assert labs == {"a": "a", "b": "a", "c": "c"}
 
 
+def test_component_labels_star_loop_signs_filtered_edges(spark):
+    """An already-contracted edge set with an isolate converges in one
+    star round: the loop's starting signature covers the same
+    self-loop-filtered rows it iterates on, not the isolate row too."""
+    import libpysal_spark.graph as G
+
+    g = Graph(
+        spark.createDataFrame(
+            [(1, 0, 1.0), (2, 0, 1.0), (5, 5, 0.0)],
+            "focal long, neighbor long, weight double",
+        )
+    )
+    dist = {r.id: r.component for r in g.component_labels(driver_cap=0).collect()}
+    assert G.last_components_info["rounds"] == 1
+    drv = {r.id: r.component for r in g.component_labels(driver_cap=10**6).collect()}
+    assert G.last_components_info.get("driver_path") is True
+    assert dist == drv
+
+
 def test_w_clip_and_remap(spark):
     a = Graph.from_dicts(spark, {0: [1, 2], 1: [0], 2: [0]})
     b = Graph.from_dicts(spark, {0: [1], 1: [0], 2: []})

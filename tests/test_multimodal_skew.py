@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from libpysal_spark.operators.contiguity import block_weights
 from libpysal_spark.pages import pages
-from libpysal_spark.plans.skew import block_weights_salted
+from libpysal_spark.plans.skew import salted_self_join
 from libpysal_spark.text.multimodal import decode_image, media_metadata, sample_frames
 
 SF = "/root/testdata/sf0.001"
@@ -52,9 +52,22 @@ def test_sample_frames_fake(spark):
 
 
 def test_salted_join_equivalence(spark):
-    sup = spark.read.parquet(f"{SF}/supplier.parquet").select(
-        F.col("s_suppkey").alias("id"), F.col("s_nationkey").alias("regime")
+    # customers share nations (suppliers at this scale do not), so the
+    # blocks hold real pairs
+    cust = spark.read.parquet(f"{SF}/customer.parquet").select(
+        F.col("c_custkey").alias("id"), F.col("c_nationkey").alias("regime")
     )
-    plain = block_weights(sup).sorted().toPandas()
-    salted = block_weights_salted(sup, salt=4).sorted().toPandas()
+    plain = (
+        block_weights(cust).edges
+        .filter(F.col("focal") != F.col("neighbor"))
+        .select("focal", "neighbor")
+        .orderBy("focal", "neighbor")
+        .toPandas()
+    )
+    salted = (
+        salted_self_join(cust, "regime", salt=4)
+        .orderBy("focal", "neighbor")
+        .toPandas()
+    )
+    assert len(plain) > 0
     assert plain.equals(salted)
