@@ -32,7 +32,7 @@ from libpysal_spark.functions.detagg import (
     portable_round,
     portable_round_sql,
 )
-from libpysal_spark.functions.kernels import kernel_sql, kernel_expr
+from libpysal_spark.functions.kernels import kernel_sql
 from libpysal_spark.graph import Graph
 from libpysal_spark.operators.contiguity import block_weights, queen, rook
 from libpysal_spark.operators.distance import (
@@ -872,8 +872,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # is not SQL-expressible; the driver records the weaker rows-only check;
     # exactness is covered by tests/test_delaunay.py property checks).
     # All graded triangulation queries run the PARTITIONED path
-    # (cells_per_side=4) whose halo-sufficiency certificate auto-widens and
-    # retries on violation (operators/delaunay.py:_halo_violation) ---
+    # (cells_per_side=4): each cell UDF certifies its triangles
+    # (need < halo), and broadcast empty-disk witness rounds settle the
+    # rest, so the build is exact (operators/delaunay.py:delaunay_triangles) ---
     def _delaunay(s, d):
         from libpysal_spark.operators.delaunay import delaunay
 

@@ -15,16 +15,19 @@ an edge can connect distant points across empty space. Strategy:
 - triangulate locally per cell (Arrow batch, pure numpy);
 - keep a triangle iff its minimum vertex id is OWNED by the cell (each
   triangle emitted exactly once);
-- CERTIFY the build: every local triangle incident to an owned vertex must
-  have its circumdisk (clipped to the global bbox) strictly inside the
-  cell's shipped region — then circumcircle emptiness is globally verified
-  and the partitioned result is exact. On any violation the halo widens and
-  the build retries (terminates: halo == cells_per_side ships everything).
-  With ``cells_per_side=1`` the result is trivially exact.
+- CERTIFY per cell: a triangle counts only when its circumdisk (clipped to
+  the global hull) needs fewer cells of context than the halo shipped
+  (``need < halo`` in the cell UDF) — then no unshipped point can lie in
+  it. Owned points with an uncertified triangle stay OPEN; their candidate
+  triangles go through broadcast empty-disk witness rounds (verified
+  against the full point table; refuting points are shipped back as
+  witnesses), so every emitted triangle is globally Delaunay and the
+  partitioned result is exact. With ``cells_per_side=1`` the one cell holds
+  every point and all of its triangles are certified.
 
-Edges are undirected in construction; both directions are emitted in the
-final graph, matching the reference's 6-directed-edges-per-simplex + dedup
-(weights/gabriel.py:266-282).
+Edges are the three sides of every triangle; both directions are emitted in
+the final graph, matching the reference's 6-directed-edges-per-simplex +
+dedup (weights/gabriel.py:266-282).
 """
 
 from __future__ import annotations
@@ -143,21 +146,6 @@ def _bowyer_watson_tris(
     ]
 
 
-def _bowyer_watson_edges(ids: np.ndarray, xy: np.ndarray) -> set[tuple[int, int]]:
-    """Delaunay edges (as id pairs, a<b) via incremental Bowyer-Watson."""
-    n = len(ids)
-    if n < 2:
-        return set()
-    if n == 2:
-        return {(int(min(ids)), int(max(ids)))}
-    edges: set[tuple[int, int]] = set()
-    for a, b, c in _bowyer_watson_tris(ids, xy):
-        for u, v in ((a, b), (b, c), (c, a)):
-            iu, iv = int(ids[u]), int(ids[v])
-            edges.add((min(iu, iv), max(iu, iv)))
-    return edges
-
-
 def _circum_batch(p: np.ndarray, tris: np.ndarray) -> np.ndarray:
     """(k, 3) array of (ccx, ccy, r2) for index triples ``tris`` into ``p``.
 
@@ -250,16 +238,11 @@ def global_hull(points: DataFrame) -> tuple[list[int], list[tuple[float, float]]
     )
 
 
-def global_hull_ids(points: DataFrame) -> list[int]:
-    """Ids of the global convex hull (see :func:`global_hull`)."""
-    return global_hull(points)[0]
-
-
 def global_hull_ring(points: DataFrame) -> list[tuple[float, float]]:
     """Global convex hull as a CLOSED CCW coordinate ring.
 
     Distributed partial hulls + driver merge (same two-level scheme as
-    :func:`global_hull_ids`); the collected set is bounded by the hull size.
+    :func:`global_hull`); the collected set is bounded by the hull size.
     Ordering: angular sort around the hull centroid (valid for any convex
     polygon)."""
     import math
@@ -310,75 +293,6 @@ def _resolve_clip_ring(points: DataFrame, clip, box: list) -> list:
             "non-convex clips (reference clip='alpha_shape') are out of scope"
         )
     return ring
-
-
-class _GridParams:
-    """Grid geometry shared by cell tagging and the halo certificate."""
-
-    def __init__(self, x0, x1, y0, y1, sx, sy):
-        self.x0, self.x1, self.y0, self.y1, self.sx, self.sy = x0, x1, y0, y1, sx, sy
-
-
-def _grid_params(points: DataFrame, cells_per_side: int) -> _GridParams:
-    b = points.agg(
-        F.min("x").alias("x0"), F.max("x").alias("x1"),
-        F.min("y").alias("y0"), F.max("y").alias("y1"),
-    ).first()
-    sx = (b.x1 - b.x0) / cells_per_side or 1.0
-    sy = (b.y1 - b.y0) / cells_per_side or 1.0
-    return _GridParams(float(b.x0), float(b.x1), float(b.y0), float(b.y1), sx, sy)
-
-
-def _halo_need(p: _GridParams, cells_per_side: int) -> F.Column:
-    """Column over (cell, ccx, ccy, r2): the halo width (in cells, fractional)
-    this triangle's circumdisk REQUIRES of its emitting cell.
-
-    This drives the soundness certificate for partitioned Delaunay: a
-    circumdisk whose bbox-clipped extent lies strictly inside the shipped
-    (cell+halo) rectangle is verifiably empty of ALL global points (every
-    point in that region was shipped), so the triangle is globally Delaunay;
-    conversely a missing true triangle forces a locally-Delaunay-but-
-    globally-false replacement whose disk must reach a non-shipped point —
-    flagged because its need exceeds the halo. Clamping the disk extent to
-    the global bbox makes overreach past a bbox edge cost nothing (no points
-    live there), which also zeroes the requirement at boundary cells'
-    outward sides. Conservative: uses the disk's bounding box.
-    """
-    cxi = F.floor(F.col("cell") / cells_per_side)
-    cyi = F.col("cell") % cells_per_side
-    r = F.sqrt(F.greatest(F.col("r2"), F.lit(0.0)))
-
-    def axis(ci, s, lo, hi, cc):
-        dlo = F.greatest(cc - r, F.lit(lo))
-        dhi = F.least(cc + r, F.lit(hi))
-        return F.greatest(
-            (F.lit(lo) + ci * s - dlo) / F.lit(s),
-            (dhi - F.lit(lo) - (ci + 1) * s) / F.lit(s),
-        )
-
-    return F.greatest(
-        axis(cxi, p.sx, p.x0, p.x1, F.col("ccx")),
-        axis(cyi, p.sy, p.y0, p.y1, F.col("ccy")),
-        F.lit(0.0),
-    )
-
-
-def _halo_violation(p: _GridParams, cells_per_side: int, halo: int) -> F.Column:
-    """Boolean certificate check: the disk needs at least the current halo
-    (strict interior containment fails). See :func:`_halo_need`."""
-    eps = 1e-9
-    return _halo_need(p, cells_per_side) >= F.lit(float(halo) - eps)
-
-
-CELL_TRIANGLE_SCHEMA = (
-    "cell long, emit boolean, a long, b long, c long, ax double, ay double, "
-    "bx double, by double, cx double, cy double, ccx double, ccy double, r2 double"
-)
-
-V2_SCHEMA = (
-    "kind int, cell long, a long, b long, c long, ax double, ay double, "
-    "bx double, by double, cx double, cy double, ccx double, ccy double, r2 double"
-)
 
 
 def _disk_hull_extent(cc: np.ndarray, r2: np.ndarray, ring: np.ndarray):
@@ -463,22 +377,42 @@ def _disk_hull_extent(cc: np.ndarray, r2: np.ndarray, ring: np.ndarray):
     return xmin, xmax, ymin, ymax, nonempty
 
 
-def _make_cell_tri_udf_v2(pvals, cells_per_side, halo, hull_ring):
-    """Per-cell triangulate + certify + emit for the v2 partitioned build.
+CELL_SCHEMA = (
+    "kind int, cell long, a long, b long, c long, ax double, ay double, "
+    "bx double, by double, cx double, cy double, ccx double, ccy double, r2 double"
+)
+
+_TRI_COLS = ["a", "b", "c", "ax", "ay", "bx", "by", "cx", "cy", "ccx", "ccy", "r2"]
+
+
+def _grid_eps_abs(grid) -> float:
+    """GLOBAL-scale cocircular band half-width of the grid's extent — the one
+    value the per-cell builds and the broadcast verification share."""
+    x0, x1, y0, y1 = grid[:4]
+    return EPS_COCIRC * max(x1 - x0, y1 - y0, abs(x0), abs(x1), abs(y0), abs(y1), 1.0)
+
+
+def _make_cell_tri_udf(grid, cells_per_side, halo, hull_ring):
+    """Per-cell triangulate + certify + emit: the one body of every build.
 
     Emits (kind=0) triangles whose min vertex is OWNED and OPEN and whose
     hull-clipped circumdisk needs < halo cells of context (provably globally
     Delaunay — every point that could invalidate it was shipped), plus
     (kind=1) rows naming owned open points that remain OPEN (incident to an
-    uncertified triangle) for the next, wider round.
+    uncertified triangle) for the next round, and (kind=2) those uncertified
+    candidate triangles for the broadcast empty-disk verification.
+
+    ``grid`` is ``(x0, x1, y0, y1, sx, sy)``. With ``cells_per_side == 1``
+    the one cell is the whole extent and holds every point, so every
+    triangle is certified: ``grid``, ``halo`` and ``hull_ring`` are unused
+    and the cocircular band takes the cell's own scale, which for the full
+    point set equals :func:`_grid_eps_abs`.
     """
-    x0, x1, y0, y1, sx, sy = pvals
-    ring = np.asarray(hull_ring, dtype=float)
-    # GLOBAL-scale cocircular band: must match the broadcast verification's
-    # g_eps_abs exactly (same formula over the same global extent)
-    g_eps_abs = EPS_COCIRC * max(
-        x1 - x0, y1 - y0, abs(x0), abs(x1), abs(y0), abs(y1), 1.0
-    )
+    single = cells_per_side == 1
+    if not single:
+        x0, x1, y0, y1, sx, sy = grid
+        ring = np.asarray(hull_ring, dtype=float)
+    eps_abs = None if single else _grid_eps_abs(grid)
 
     def udf(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["id"].to_numpy()
@@ -486,12 +420,10 @@ def _make_cell_tri_udf_v2(pvals, cells_per_side, halo, hull_ring):
         owned = set(pdf.loc[pdf["own"], "id"].tolist())
         open_ = set(pdf.loc[pdf["own"] & pdf["__open"], "id"].tolist())
         cell = int(pdf["cell"].iloc[0])
-        tris = np.array(_bowyer_watson_tris(ids, xy, g_eps_abs), dtype=np.int64)
-        cols = ["kind", "cell", "a", "b", "c", "ax", "ay", "bx", "by",
-                "cx", "cy", "ccx", "ccy", "r2"]
+        tris = np.array(_bowyer_watson_tris(ids, xy, eps_abs), dtype=np.int64)
         if len(tris) == 0:
             rows = [(1, cell, int(p), 0, 0) + (0.0,) * 9 for p in sorted(open_)]
-            return pd.DataFrame(rows, columns=cols)
+            return pd.DataFrame(rows, columns=["kind", "cell"] + _TRI_COLS)
         tids = ids[tris]  # (m, 3)
         # restrict to triangles incident to >= 1 owned vertex
         own_mask = np.isin(tids, list(owned)).any(axis=1)
@@ -507,19 +439,30 @@ def _make_cell_tri_udf_v2(pvals, cells_per_side, halo, hull_ring):
         cco = _circum_batch(xy, tris)
         cc, r2 = cco[:, :2], cco[:, 2]
 
-        xmin, xmax, ymin, ymax, nonempty = _disk_hull_extent(cc, r2, ring)
-        cxi = cell // cells_per_side
-        cyi = cell % cells_per_side
-        nx = np.maximum(
-            (x0 + cxi * sx - np.maximum(xmin, x0)) / sx,
-            (np.minimum(xmax, x1) - x0 - (cxi + 1) * sx) / sx,
-        )
-        ny = np.maximum(
-            (y0 + cyi * sy - np.maximum(ymin, y0)) / sy,
-            (np.minimum(ymax, y1) - y0 - (cyi + 1) * sy) / sy,
-        )
-        need = np.where(nonempty, np.maximum(np.maximum(nx, ny), 0.0), 0.0)
-        certified = need < (halo - 1e-9)
+        if single:
+            certified = np.ones(len(tris), dtype=bool)
+        else:
+            # the halo (in cells, fractional) each circumdisk REQUIRES of
+            # this cell: a disk whose hull-clipped extent lies strictly
+            # inside the shipped cell+halo rectangle is empty of ALL global
+            # points (every point there was shipped), so its triangle is
+            # globally Delaunay; a missing true triangle forces a locally-
+            # but-not-globally Delaunay replacement whose disk reaches an
+            # unshipped point, i.e. needs >= halo. Conservative: the disk's
+            # bounding box.
+            xmin, xmax, ymin, ymax, nonempty = _disk_hull_extent(cc, r2, ring)
+            cxi = cell // cells_per_side
+            cyi = cell % cells_per_side
+            nx = np.maximum(
+                (x0 + cxi * sx - np.maximum(xmin, x0)) / sx,
+                (np.minimum(xmax, x1) - x0 - (cxi + 1) * sx) / sx,
+            )
+            ny = np.maximum(
+                (y0 + cyi * sy - np.maximum(ymin, y0)) / sy,
+                (np.minimum(ymax, y1) - y0 - (cyi + 1) * sy) / sy,
+            )
+            need = np.where(nonempty, np.maximum(np.maximum(nx, ny), 0.0), 0.0)
+            certified = need < (halo - 1e-9)
 
         min_ids = tids.min(axis=1)
         emit = (
@@ -549,99 +492,56 @@ def _make_cell_tri_udf_v2(pvals, cells_per_side, halo, hull_ring):
         for p in still_open:
             rows.append((1, cell, int(p), 0, 0) + (0.0,) * 9)
         rows.extend(tri_row(2, t) for t in np.nonzero(uncert_open)[0])
-        return pd.DataFrame(rows, columns=cols)
+        return pd.DataFrame(rows, columns=["kind", "cell"] + _TRI_COLS)
 
     return udf
 
 
-def _cell_tri_udf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Local triangulation of one macro cell: every local triangle incident
-    to >=1 owned vertex (for the halo certificate), ``emit`` marking the ones
-    this cell owns (min vertex id) and therefore publishes."""
-    ids = pdf["id"].to_numpy()
-    xy = pdf[["x", "y"]].to_numpy(dtype=float)
-    owned = set(pdf.loc[pdf["own"], "id"].tolist())
-    cell = int(pdf["cell"].iloc[0])
-    rows = []
-    for ia, ib, ic in _bowyer_watson_tris(ids, xy):
-        trip = sorted((int(ids[i]), i) for i in (ia, ib, ic))
-        if not any(t[0] in owned for t in trip):
-            continue
-        (a, pa), (b, pb), (c, pc) = trip
-        ccx, ccy, r2 = _circum(xy, pa, pb, pc)
-        rows.append(
-            (cell, a in owned, a, b, c,
-             xy[pa][0], xy[pa][1], xy[pb][0], xy[pb][1], xy[pc][0], xy[pc][1],
-             ccx, ccy, r2)
-        )
-    return pd.DataFrame(
-        rows,
-        columns=["cell", "emit", "a", "b", "c", "ax", "ay", "bx", "by",
-                 "cx", "cy", "ccx", "ccy", "r2"],
+def _single_cell_triangles(points: DataFrame) -> DataFrame:
+    """Exact triangles from ONE task holding every point: the
+    ``cells_per_side=1`` build and the ``ghost_cap`` fallback."""
+    tagged = points.select(
+        "id", "x", "y",
+        F.lit(0).alias("cell"), F.lit(True).alias("own"), F.lit(True).alias("__open"),
+    )
+    return (
+        tagged.groupBy("cell")
+        .applyInPandas(_make_cell_tri_udf(None, 1, 0, None), CELL_SCHEMA)
+        .filter(F.col("kind") == 0)
+        .select(*_TRI_COLS)
     )
 
 
-def _single_cell_edges(points: DataFrame) -> DataFrame:
-    """Exact undirected Delaunay edges via the single-cell build (one task
-    holds all points; the _bowyer_watson_edges path handles n==2 and
-    collinear sets explicitly)."""
-    tagged = _tag_cells(points, 1, 1)
-
-    def tri(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy()
-        xy = pdf[["x", "y"]].to_numpy(dtype=float)
-        owned = set(pdf.loc[pdf["own"], "id"].tolist())
-        edges = _bowyer_watson_edges(ids, xy)
-        rows = [(a, b) for a, b in edges if a in owned]
-        return pd.DataFrame(rows, columns=["focal", "neighbor"])
-
-    return tagged.groupBy("cell").applyInPandas(
-        tri, "focal long, neighbor long"
-    ).distinct()
-
-
 def delaunay(points: DataFrame, cells_per_side: int = 1) -> Graph:
-    """Delaunay graph. ``cells_per_side=1``: exact single-partition build.
+    """Delaunay graph: the three edges of every :func:`delaunay_triangles`
+    row, both directions. ``cells_per_side=1`` is the exact single-cell
+    build; for >1 the partitioned build certifies every emitted triangle
+    (see :func:`delaunay_triangles`), so the result is exact either way.
 
-    For >1, points are gridded; each cell triangulates own+halo points plus
-    the GLOBAL CONVEX HULL points as ghosts (the only points that form
-    super-long Delaunay edges; broadcasting them repairs the hull-spanning
-    edges a bounded halo would miss). The halo-sufficiency certificate is
-    always CHECKED, and the build widens the halo and retries until it
-    holds (see :func:`delaunay_triangles`), so the partitioned result is
-    exact — never silently approximate.
-
-    Degenerate inputs (n < 3, or an all-collinear point set that yields no
-    triangles) short-circuit to the single-cell exact path, which emits the
-    chain edges the triangle-derived path cannot express — both paths agree
-    on every input.
+    n == 2 has one Delaunay edge and no triangle: a lazy ``count == 2``
+    aggregate adds it to the plan. An all-collinear input has no triangles
+    and gives isolates only (the reference's scipy Qhull errors on it).
     """
-    if cells_per_side == 1:
-        und = _single_cell_edges(points)
-    else:
-        # eager checkpoint (r6): the isEmpty degenerate probe AND the edge
-        # derivation both consume the final dedup — without materialization
-        # the union + groupBy of every emitted part ran twice.
-        tris = delaunay_triangles(points, cells_per_side).localCheckpoint()
-        if tris.isEmpty():
-            # degenerate (tiny or collinear) input: no triangles exist, but
-            # Delaunay EDGES may (n==2, collinear chains) — use the exact
-            # single-cell edge build, which special-cases them
-            und = _single_cell_edges(points)
-        else:
-            und = (
-                tris.select(
-                    F.explode(
-                        F.array(
-                            F.struct(F.col("a").alias("focal"), F.col("b").alias("neighbor")),
-                            F.struct(F.col("b").alias("focal"), F.col("c").alias("neighbor")),
-                            F.struct(F.col("a").alias("focal"), F.col("c").alias("neighbor")),
-                        )
-                    ).alias("e")
-                )
-                .select("e.focal", "e.neighbor")
-                .distinct()
+    tris = delaunay_triangles(points, cells_per_side)
+    und = tris.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("a").alias("focal"), F.col("b").alias("neighbor")),
+                F.struct(F.col("b").alias("focal"), F.col("c").alias("neighbor")),
+                F.struct(F.col("a").alias("focal"), F.col("c").alias("neighbor")),
             )
+        ).alias("e")
+    ).select("e.focal", "e.neighbor")
+    pair = (
+        points.agg(
+            F.count("*").alias("__n"),
+            F.min("id").alias("focal"),
+            F.max("id").alias("neighbor"),
+        )
+        .filter(F.col("__n") == 2)
+        .select("focal", "neighbor")
+    )
+    und = und.unionByName(pair)
     edges = (
         und.unionByName(
             und.select(F.col("neighbor").alias("focal"), F.col("focal").alias("neighbor"))
@@ -656,70 +556,51 @@ def _tag_cells(
     points: DataFrame,
     cells_per_side: int,
     halo_cells: int,
-    params: _GridParams | None = None,
-    hull_ids: list | None = None,
-    ghost_pts: DataFrame | None = None,
+    grid: tuple,
+    ghost_pts: DataFrame,
 ) -> DataFrame:
-    """(id, x, y, cell, own) — macro-cell assignment with halo + hull ghosts.
+    """(id, x, y, cell, own) — macro-cell assignment with halo + ghosts.
 
-    ``hull_ids``: pre-computed global-hull ids (so the retry loop computes
-    the hull once, not per attempt). ``ghost_pts``: explicit ghost source —
-    REQUIRED when ``points`` is a filtered subset (the v2 straggler rounds),
-    because the hull rows must come from the full table."""
-    spark = points.sparkSession
+    ``ghost_pts`` (the global hull) is shipped to every cell; it comes from
+    the full table because ``points`` may be a filtered subset (the
+    straggler rounds)."""
+    x0, _, y0, _, sx, sy = grid
     pts = points.select("id", "x", "y")
-    if cells_per_side == 1:
-        tagged = pts.withColumn("cell", F.lit(0)).withColumn("own", F.lit(True))
-    else:
-        bounds = params or _grid_params(pts, cells_per_side)
-        sx = bounds.sx
-        sy = bounds.sy
-        cxe = F.least(
-            F.floor((F.col("x") - bounds.x0) / sx), F.lit(cells_per_side - 1)
+    cxe = F.least(F.floor((F.col("x") - x0) / sx), F.lit(cells_per_side - 1))
+    cye = F.least(F.floor((F.col("y") - y0) / sy), F.lit(cells_per_side - 1))
+    home = pts.withColumn("cx", cxe).withColumn("cy", cye)
+    offs = F.expr(
+        f"flatten(transform(sequence(-{halo_cells}, {halo_cells}), dx -> "
+        f"transform(sequence(-{halo_cells}, {halo_cells}), dy -> struct(dx, dy))))"
+    )
+    tagged = (
+        home.withColumn("__o", F.explode(offs))
+        .withColumn("tcx", F.col("cx") + F.col("__o.dx"))
+        .withColumn("tcy", F.col("cy") + F.col("__o.dy"))
+        .filter(
+            (F.col("tcx") >= 0) & (F.col("tcx") < cells_per_side)
+            & (F.col("tcy") >= 0) & (F.col("tcy") < cells_per_side)
         )
-        cye = F.least(
-            F.floor((F.col("y") - bounds.y0) / sy), F.lit(cells_per_side - 1)
+        .withColumn("cell", F.col("tcx") * cells_per_side + F.col("tcy"))
+        .withColumn("own", (F.col("__o.dx") == 0) & (F.col("__o.dy") == 0))
+        .select("id", "x", "y", "cell", "own")
+    )
+    # global hull points as ghosts in every cell (repairs hull-spanning
+    # edges); tiny list -> broadcast cross join
+    hull_pts = F.broadcast(ghost_pts.select("id", "x", "y"))
+    all_cells = points.sparkSession.range(cells_per_side * cells_per_side).select(
+        F.col("id").alias("cell")
+    )
+    ghosts = hull_pts.crossJoin(all_cells).withColumn("own", F.lit(False))
+    return (
+        tagged.unionByName(ghosts.select("id", "x", "y", "cell", "own"))
+        .groupBy("id", "cell")
+        .agg(
+            F.first("x").alias("x"),
+            F.first("y").alias("y"),
+            F.max("own").alias("own"),
         )
-        home = pts.withColumn("cx", cxe).withColumn("cy", cye)
-        offs = F.expr(
-            f"flatten(transform(sequence(-{halo_cells}, {halo_cells}), dx -> "
-            f"transform(sequence(-{halo_cells}, {halo_cells}), dy -> struct(dx, dy))))"
-        )
-        tagged = (
-            home.withColumn("__o", F.explode(offs))
-            .withColumn("tcx", F.col("cx") + F.col("__o.dx"))
-            .withColumn("tcy", F.col("cy") + F.col("__o.dy"))
-            .filter(
-                (F.col("tcx") >= 0) & (F.col("tcx") < cells_per_side)
-                & (F.col("tcy") >= 0) & (F.col("tcy") < cells_per_side)
-            )
-            .withColumn("cell", F.col("tcx") * cells_per_side + F.col("tcy"))
-            .withColumn("own", (F.col("__o.dx") == 0) & (F.col("__o.dy") == 0))
-            .select("id", "x", "y", "cell", "own")
-        )
-        # global hull points as ghosts in every cell (repairs hull-spanning
-        # edges); tiny list -> broadcast cross join
-        if ghost_pts is None:
-            if hull_ids is None:
-                hull_ids = global_hull_ids(pts)
-            ghost_pts = pts.filter(F.col("id").isin(hull_ids))
-        hull_pts = F.broadcast(ghost_pts.select("id", "x", "y"))
-        all_cells = spark.range(cells_per_side * cells_per_side).select(
-            F.col("id").alias("cell")
-        )
-        ghosts = hull_pts.crossJoin(all_cells).withColumn("own", F.lit(False))
-        tagged = (
-            tagged.unionByName(ghosts.select("id", "x", "y", "cell", "own"))
-            .groupBy("id", "cell")
-            .agg(
-                F.first("x").alias("x"),
-                F.first("y").alias("y"),
-                F.max("own").alias("own"),
-            )
-        )
-    return tagged
-
-
+    )
 
 
 #: Diagnostics of the most recent :func:`delaunay_triangles` build —
@@ -742,30 +623,32 @@ def delaunay_triangles(
     """Delaunay triangles with vertex coordinates + circumcircle.
 
     Columns: (a, b, c) vertex ids sorted ascending, their coordinates, the
-    circumcenter (ccx, ccy) and squared circumradius r2. Each triangle is
-    emitted by exactly one cell (the one owning its minimum vertex id) —
-    same ownership rule as the edge path. Feeds alpha shapes
-    (reference cg/alpha_shapes.py:385-580: circumradius filtration) and
-    Voronoi clipping (duals of these triangles).
+    circumcenter (ccx, ccy) and squared circumradius r2 — one row per
+    triangle. Feeds alpha shapes (reference cg/alpha_shapes.py:385-580:
+    circumradius filtration) and Voronoi clipping (duals of these triangles).
 
-    With ``cells_per_side > 1``, every build starts at halo 1 and is
-    certified by the halo-sufficiency check (:func:`_halo_violation`): if
-    any local triangle incident to an owned vertex has a circumdisk reaching
-    outside its cell's shipped region, the halo is WIDENED and the build
-    retried (VERDICT r2 #2 — correctness is automatic, not the caller's
-    job). At ``halo == cells_per_side`` every cell ships the full grid, so
-    the loop always terminates at an exact build; each retry costs one
-    extra distributed pass, and quasi-uniform data converges at halo 1.
+    ``cells_per_side=1`` triangulates every point in one task. For >1 the
+    points are gridded and each round triangulates the cells that own an
+    OPEN point from their own, halo and global-hull-ghost points. The cell
+    UDF certifies a triangle when its hull-clipped circumdisk needs fewer
+    cells of context than the halo (``need < halo``); certified triangles
+    are emitted by the cell owning their min vertex, and an owned point
+    closes once all its incident triangles certify. The uncertified
+    candidates then go through broadcast empty-disk witness rounds: an
+    empty disk is emitted as is, a refuted one ships its nearest refuting
+    points to the cell as witnesses and the cell re-triangulates. Above
+    ``WITNESS_OPEN_CAP`` open points, or after ``MAX_WITNESS_ROUNDS``, the
+    halo widens instead, up to ``halo == cells_per_side`` (every cell ships
+    the full grid). Every emitted triangle is verified, so the result is
+    exact.
     """
     global last_build_info
     if cells_per_side == 1:
-        tagged = _tag_cells(points, 1, 1)
-        ct = tagged.groupBy("cell").applyInPandas(_cell_tri_udf, CELL_TRIANGLE_SCHEMA)
         last_build_info = {
             "mode": "single-cell", "halo": 0, "retries": 0,
             "hull_size": None, "full_replication": True,
         }
-        return ct.drop("cell", "emit").distinct()
+        return _single_cell_triangles(points)
 
     import math
     import warnings
@@ -783,13 +666,11 @@ def delaunay_triangles(
             "partitioned Delaunay falling back to the single-cell exact build "
             "(convex-position-heavy input is not cell-decomposable)"
         )
-        tagged = _tag_cells(pts, 1, 1)
-        ct = tagged.groupBy("cell").applyInPandas(_cell_tri_udf, CELL_TRIANGLE_SCHEMA)
         last_build_info = {
             "mode": "single-cell-hull-fallback", "halo": 0, "retries": 0,
             "hull_size": len(hull_ids), "full_replication": True,
         }
-        return ct.drop("cell", "emit").distinct()
+        return _single_cell_triangles(pts)
 
     # r6: the grid bounds ARE the hull's extremes (every min/max-coordinate
     # point lies on the convex hull), and the hull coords came back with the
@@ -798,12 +679,9 @@ def delaunay_triangles(
     hx = [p[0] for p in hpts]
     hy = [p[1] for p in hpts]
     x0, x1, y0, y1 = min(hx), max(hx), min(hy), max(hy)
-    params = _GridParams(
-        x0, x1, y0, y1,
-        (x1 - x0) / cells_per_side or 1.0,
-        (y1 - y0) / cells_per_side or 1.0,
-    )
-    pvals = (params.x0, params.x1, params.y0, params.y1, params.sx, params.sy)
+    sx = (x1 - x0) / cells_per_side or 1.0
+    sy = (y1 - y0) / cells_per_side or 1.0
+    grid = (x0, x1, y0, y1, sx, sy)
     hcx = sum(p[0] for p in hpts) / len(hpts)
     hcy = sum(p[1] for p in hpts) / len(hpts)
     hull_ring = sorted(hpts, key=lambda p: math.atan2(p[1] - hcy, p[0] - hcx))
@@ -824,33 +702,18 @@ def delaunay_triangles(
     # doubles for THOSE cells' next round, not for the whole build. The r3
     # design escalated the global halo on any violation, which the 100k
     # rehearsal showed degrades to full replication at scale.
-    #
-    # AQE coalesces shuffle partitions by BYTES; the per-cell triangulation
-    # is bytes-light but compute-heavy, so coalescing collapses the cell
-    # groups onto a few tasks (measured: 64 cells -> 12 tasks) — disabled
-    # around the eager builds.
-    spark = pts.sparkSession
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev_coalesce = spark.conf.get(coalesce_key, "true")
-    spark.conf.set(coalesce_key, "false")
     emitted = []
     open_df = pts.select("id")
     halo = 1
     rounds = 0
     open_trace = []
-    home_cx = F.least(
-        F.floor((F.col("x") - params.x0) / params.sx), F.lit(cells_per_side - 1)
-    )
-    home_cy = F.least(
-        F.floor((F.col("y") - params.y0) / params.sy), F.lit(cells_per_side - 1)
-    )
+    home_cx = F.least(F.floor((F.col("x") - x0) / sx), F.lit(cells_per_side - 1))
+    home_cy = F.least(F.floor((F.col("y") - y0) / sy), F.lit(cells_per_side - 1))
     home_cell = home_cx * cells_per_side + home_cy
     cps = cells_per_side
     ghost_src = pts.filter(F.col("id").isin(hull_ids))
     witnesses = None  # (cell, id, x, y) extra context for straggler cells
     witness_rounds = 0
-    TRI_COLS = ["a", "b", "c", "ax", "ay", "bx", "by", "cx", "cy",
-                "ccx", "ccy", "r2"]
 
     def open_info(open_local) -> tuple:
         """(n_open, home-cell set) of the open points — ONE small job that
@@ -883,9 +746,7 @@ def delaunay_triangles(
                             ship.add(tx * cps + ty)
             pts_sub = pts.filter(home_cell.isin([int(c) for c in ship]))
             active_set = [int(c) for c in act]
-        tagged = _tag_cells(
-            pts_sub, cps, halo_local, params, hull_ids, ghost_pts=ghost_src
-        )
+        tagged = _tag_cells(pts_sub, cps, halo_local, grid, ghost_src)
         if witnesses is not None:
             tagged = tagged.unionByName(
                 witnesses.select(
@@ -913,194 +774,190 @@ def delaunay_triangles(
                 tg = tg.join(active, "cell", "left_semi")
             else:
                 tg = tg.filter(F.col("cell").isin(active_set))
-        udf = _make_cell_tri_udf_v2(pvals, cps, halo_local, hull_ring)
-        # LAZY checkpoint (r6): the next action — the open-count in the
-        # verify loop — materializes the per-cell pass in the SAME job;
-        # eager cost one extra driver-synchronous job per round. All later
-        # consumers (cands filter, emitted union) read the same stored
-        # blocks.
+        udf = _make_cell_tri_udf(grid, cps, halo_local, hull_ring)
+        # One task per cell: the per-cell triangulation is bytes-light but
+        # compute-heavy, and AQE (which coalesces by bytes) leaves a
+        # repartition with an explicit partition count alone, so the
+        # grouping reuses it. LAZY checkpoint (r6): the next action — the
+        # open-count in the verify loop — materializes the per-cell pass in
+        # the SAME job; eager cost one extra driver-synchronous job per
+        # round. All later consumers (cands filter, emitted union) read the
+        # same stored blocks.
         return (
             tg.repartition(cps * cps, "cell")
             .groupBy("cell")
-            .applyInPandas(udf, V2_SCHEMA)
+            .applyInPandas(udf, CELL_SCHEMA)
             .localCheckpoint(eager=False)
         )
 
     # above this many open points the witness candidate set would be too
     # big to broadcast — fall back to one wider grid round first
     WITNESS_OPEN_CAP = 20_000
-    try:
-        # ---- phase 1: grid round(s) at the initial halo ----------------
-        while True:
-            rounds += 1
-            out = build_round(open_df, halo, rounds == 1)
-            emitted.append(out.filter(F.col("kind") == 0).select(*TRI_COLS))
-            open_df = out.filter(F.col("kind") == 1).select(F.col("a").alias("id"))
-            n_open = open_df.count()
-            open_trace.append(n_open)
-            if n_open == 0 or halo >= cps:
-                break
-            if n_open <= WITNESS_OPEN_CAP:
-                break  # hand the stragglers to the witness phase
-            halo = min(cps, halo * 2)
+    # ---- phase 1: grid round(s) at the initial halo ----------------
+    while True:
+        rounds += 1
+        out = build_round(open_df, halo, rounds == 1)
+        emitted.append(out.filter(F.col("kind") == 0).select(*_TRI_COLS))
+        open_df = out.filter(F.col("kind") == 1).select(F.col("a").alias("id"))
+        n_open = open_df.count()
+        open_trace.append(n_open)
+        if n_open == 0 or halo >= cps:
+            break
+        if n_open <= WITNESS_OPEN_CAP:
+            break  # hand the stragglers to the witness phase
+        halo = min(cps, halo * 2)
 
-        # ---- phase 2: broadcast empty-disk verification + witnesses ----
-        # The remaining open points are hull-adjacent stars whose candidate
-        # triangles have big circumdisks (r3's design here doubled the halo
-        # until whole cells shipped everything). Instead: the UNCERTIFIED
-        # candidate triangles (kind=2, a small set) are verified DIRECTLY —
-        # broadcast them against the full point table and test circumdisk
-        # emptiness. Empty -> globally Delaunay -> emit, no shipping at
-        # all. Non-empty -> the refuting points ARE the missing context:
-        # the nearest ones are shipped to the cell as witnesses and the
-        # cell re-triangulates. Each refuted candidate's disk gains a
-        # shipped witness, so it cannot reappear; the local star converges
-        # to the true star. Cost per round: one scan of the point table
-        # against a broadcast candidate list with a bbox prefilter.
-        MAX_WITNESS_ROUNDS = 12
-        WITNESSES_PER_CAND = 64
-        while open_trace[-1] > 0 and halo < cps:
-            if witness_rounds >= MAX_WITNESS_ROUNDS:
-                # loud fallback, never silent: full-context pass for the
-                # leftover cells (exact by construction)
-                warnings.warn(
-                    f"partitioned Delaunay: {open_trace[-1]} points still "
-                    f"open after {witness_rounds} witness rounds — final "
-                    "full-halo pass for their cells"
-                )
-                halo = cps
-                rounds += 1
-                out = build_round(open_df, halo, False)
-                emitted.append(out.filter(F.col("kind") == 0).select(*TRI_COLS))
-                open_trace.append(0)
-                break
-            cands = out.filter(F.col("kind") == 2).select("cell", *TRI_COLS).distinct()
-            r_col = F.sqrt(F.greatest(F.col("r2"), F.lit(0.0)))
-            # Cocircular tie-break, mirroring the local build exactly (ADVICE
-            # r4 #2). With the EPS_COCIRC band, the local Bowyer-Watson
-            # resolves any cocircular set S to the fan from S's lex-max
-            # (x, y, id) point, so a candidate T=(m,u,v) (m = lex-max vertex)
-            # is globally canonical iff (a) no point is strictly inside its
-            # disk, (b) no ON-circle point is lex-greater than m (else the
-            # true fan apexes there), and (c) no ON-circle point lies on the
-            # open arc between u and v that avoids m (else u,v are not
-            # angularly adjacent in S and T is not a fan triangle). The
-            # refutation filter is the complement of (a)&(b)&(c).
-            vmax = F.greatest(
-                F.struct(F.col("ax").alias("lx"), F.col("ay").alias("ly"),
-                         F.col("a").alias("li")),
-                F.struct(F.col("bx").alias("lx"), F.col("by").alias("ly"),
-                         F.col("b").alias("li")),
-                F.struct(F.col("cx").alias("lx"), F.col("cy").alias("ly"),
-                         F.col("c").alias("li")),
+    # ---- phase 2: broadcast empty-disk verification + witnesses ----
+    # The remaining open points are hull-adjacent stars whose candidate
+    # triangles have big circumdisks (r3's design here doubled the halo
+    # until whole cells shipped everything). Instead: the UNCERTIFIED
+    # candidate triangles (kind=2, a small set) are verified DIRECTLY —
+    # broadcast them against the full point table and test circumdisk
+    # emptiness. Empty -> globally Delaunay -> emit, no shipping at
+    # all. Non-empty -> the refuting points ARE the missing context:
+    # the nearest ones are shipped to the cell as witnesses and the
+    # cell re-triangulates. Each refuted candidate's disk gains a
+    # shipped witness, so it cannot reappear; the local star converges
+    # to the true star. Cost per round: one scan of the point table
+    # against a broadcast candidate list with a bbox prefilter.
+    MAX_WITNESS_ROUNDS = 12
+    WITNESSES_PER_CAND = 64
+    while open_trace[-1] > 0 and halo < cps:
+        if witness_rounds >= MAX_WITNESS_ROUNDS:
+            # loud fallback, never silent: full-context pass for the
+            # leftover cells (exact by construction)
+            warnings.warn(
+                f"partitioned Delaunay: {open_trace[-1]} points still "
+                f"open after {witness_rounds} witness rounds — final "
+                "full-halo pass for their cells"
             )
-            tha = F.atan2(F.col("ay") - F.col("ccy"), F.col("ax") - F.col("ccx"))
-            thb = F.atan2(F.col("by") - F.col("ccy"), F.col("bx") - F.col("ccx"))
-            thc = F.atan2(F.col("cy") - F.col("ccy"), F.col("cx") - F.col("ccx"))
-            is_max_a = (F.col("__vmax.li") == F.col("a"))
-            is_max_b = (F.col("__vmax.li") == F.col("b"))
-            thm = F.when(is_max_a, tha).when(is_max_b, thb).otherwise(thc)
-            thu = F.when(is_max_a, thb).otherwise(tha)
-            thv = F.when(is_max_a | is_max_b, thc).otherwise(thb)
-            cb = F.broadcast(
-                cands.withColumn("__vmax", vmax)
-                .withColumn("__thu", thu)
-                .withColumn("__dv", _posmod_2pi(thv - F.col("__thu")))
-                .withColumn("__dm", _posmod_2pi(thm - F.col("__thu")))
-                .select(
-                    "cell", "a", "b", "c", "ccx", "ccy", "r2",
-                    "__vmax", "__thu", "__dv", "__dm",
-                    (F.col("ccx") - r_col).alias("__bx0"),
-                    (F.col("ccx") + r_col).alias("__bx1"),
-                    (F.col("ccy") - r_col).alias("__by0"),
-                    (F.col("ccy") + r_col).alias("__by1"),
-                )
-            )
-            # cocircular band in d^2 units, matching the local build's
-            # _band_d2 (absolute-distance component + giant-disk relative
-            # component); the global data scale mirrors the per-cell one
-            g_eps_abs = EPS_COCIRC * max(
-                params.x1 - params.x0, params.y1 - params.y0,
-                abs(params.x0), abs(params.x1),
-                abs(params.y0), abs(params.y1), 1.0,
-            )
-            band = F.greatest(
-                F.col("r2") * EPS_R2_REL,
-                2.0 * F.sqrt(F.greatest(F.col("r2"), F.lit(0.0)))
-                * F.lit(g_eps_abs),
-            )
-            strict_in = F.col("__d2") < F.col("r2") - band
-            on_circle = (~strict_in) & (F.col("__d2") <= F.col("r2") + band)
-            q_lex = F.struct(
-                F.col("x").alias("lx"), F.col("y").alias("ly"),
-                F.col("id").alias("li"),
-            )
-            dq = _posmod_2pi(
-                F.atan2(F.col("y") - F.col("ccy"), F.col("x") - F.col("ccx"))
-                - F.col("__thu")
-            )
-            arc_hit = (
-                (F.col("__dm") > F.col("__dv"))
-                & (dq > 0) & (dq < F.col("__dv"))
-            ) | (
-                (F.col("__dm") < F.col("__dv")) & (dq > F.col("__dv"))
-            )
-            hits = (
-                pts.join(
-                    cb,
-                    (F.col("x") >= F.col("__bx0")) & (F.col("x") <= F.col("__bx1"))
-                    & (F.col("y") >= F.col("__by0")) & (F.col("y") <= F.col("__by1")),
-                )
-                .filter(
-                    (F.col("id") != F.col("a")) & (F.col("id") != F.col("b"))
-                    & (F.col("id") != F.col("c"))
-                )
-                .withColumn(
-                    "__d2",
-                    (F.col("x") - F.col("ccx")) ** 2 + (F.col("y") - F.col("ccy")) ** 2,
-                )
-                .filter(
-                    strict_in
-                    | (on_circle & ((q_lex > F.col("__vmax")) | arc_hit))
-                )
-                .localCheckpoint(eager=False)
-            )
-            refuted = hits.select("cell", "a", "b", "c").distinct()
-            verified = cands.join(refuted, ["cell", "a", "b", "c"], "left_anti")
-            emitted.append(verified.select(*TRI_COLS))
-            # open points whose every candidate verified -> closed
-            ref_ids = (
-                refuted.select(F.explode(F.array("a", "b", "c")).alias("id")).distinct()
-            )
-            # lazy checkpoint: the fused open_info collect below materializes
-            # it in the same job AND returns the active-cell set the
-            # build_round at the loop bottom needs (r6: one driver job where
-            # count + a separate semi-join collect used to run)
-            open_df = open_df.join(ref_ids, "id", "left_semi").localCheckpoint(
-                eager=False
-            )
-            n_open, act_cells = open_info(open_df)
-            open_trace.append(n_open)
-            witness_rounds += 1
-            if n_open == 0:
-                break
-            wnd = Window.partitionBy("cell", "a", "b", "c").orderBy("__d2", "id")
-            new_w = (
-                hits.withColumn("__rk", F.row_number().over(wnd))
-                .filter(F.col("__rk") <= WITNESSES_PER_CAND)
-                .select("cell", "id", "x", "y")
-                .distinct()
-            )
-            witnesses = (
-                new_w if witnesses is None
-                else witnesses.unionByName(new_w).distinct()
-            ).localCheckpoint(eager=False)
+            halo = cps
             rounds += 1
-            out = build_round(open_df, halo, False, act=act_cells)
-            emitted.append(out.filter(F.col("kind") == 0).select(*TRI_COLS))
-            open_df = out.filter(F.col("kind") == 1).select(F.col("a").alias("id"))
-    finally:
-        spark.conf.set(coalesce_key, prev_coalesce)
+            out = build_round(open_df, halo, False)
+            emitted.append(out.filter(F.col("kind") == 0).select(*_TRI_COLS))
+            open_trace.append(0)
+            break
+        cands = out.filter(F.col("kind") == 2).select("cell", *_TRI_COLS).distinct()
+        r_col = F.sqrt(F.greatest(F.col("r2"), F.lit(0.0)))
+        # Cocircular tie-break, mirroring the local build exactly (ADVICE
+        # r4 #2). With the EPS_COCIRC band, the local Bowyer-Watson
+        # resolves any cocircular set S to the fan from S's lex-max
+        # (x, y, id) point, so a candidate T=(m,u,v) (m = lex-max vertex)
+        # is globally canonical iff (a) no point is strictly inside its
+        # disk, (b) no ON-circle point is lex-greater than m (else the
+        # true fan apexes there), and (c) no ON-circle point lies on the
+        # open arc between u and v that avoids m (else u,v are not
+        # angularly adjacent in S and T is not a fan triangle). The
+        # refutation filter is the complement of (a)&(b)&(c).
+        vmax = F.greatest(
+            F.struct(F.col("ax").alias("lx"), F.col("ay").alias("ly"),
+                     F.col("a").alias("li")),
+            F.struct(F.col("bx").alias("lx"), F.col("by").alias("ly"),
+                     F.col("b").alias("li")),
+            F.struct(F.col("cx").alias("lx"), F.col("cy").alias("ly"),
+                     F.col("c").alias("li")),
+        )
+        tha = F.atan2(F.col("ay") - F.col("ccy"), F.col("ax") - F.col("ccx"))
+        thb = F.atan2(F.col("by") - F.col("ccy"), F.col("bx") - F.col("ccx"))
+        thc = F.atan2(F.col("cy") - F.col("ccy"), F.col("cx") - F.col("ccx"))
+        is_max_a = (F.col("__vmax.li") == F.col("a"))
+        is_max_b = (F.col("__vmax.li") == F.col("b"))
+        thm = F.when(is_max_a, tha).when(is_max_b, thb).otherwise(thc)
+        thu = F.when(is_max_a, thb).otherwise(tha)
+        thv = F.when(is_max_a | is_max_b, thc).otherwise(thb)
+        cb = F.broadcast(
+            cands.withColumn("__vmax", vmax)
+            .withColumn("__thu", thu)
+            .withColumn("__dv", _posmod_2pi(thv - F.col("__thu")))
+            .withColumn("__dm", _posmod_2pi(thm - F.col("__thu")))
+            .select(
+                "cell", "a", "b", "c", "ccx", "ccy", "r2",
+                "__vmax", "__thu", "__dv", "__dm",
+                (F.col("ccx") - r_col).alias("__bx0"),
+                (F.col("ccx") + r_col).alias("__bx1"),
+                (F.col("ccy") - r_col).alias("__by0"),
+                (F.col("ccy") + r_col).alias("__by1"),
+            )
+        )
+        # cocircular band in d^2 units, matching the local build's
+        # _band_d2 (absolute-distance component + giant-disk relative
+        # component); the global data scale mirrors the per-cell one
+        g_eps_abs = _grid_eps_abs(grid)
+        band = F.greatest(
+            F.col("r2") * EPS_R2_REL,
+            2.0 * F.sqrt(F.greatest(F.col("r2"), F.lit(0.0)))
+            * F.lit(g_eps_abs),
+        )
+        strict_in = F.col("__d2") < F.col("r2") - band
+        on_circle = (~strict_in) & (F.col("__d2") <= F.col("r2") + band)
+        q_lex = F.struct(
+            F.col("x").alias("lx"), F.col("y").alias("ly"),
+            F.col("id").alias("li"),
+        )
+        dq = _posmod_2pi(
+            F.atan2(F.col("y") - F.col("ccy"), F.col("x") - F.col("ccx"))
+            - F.col("__thu")
+        )
+        arc_hit = (
+            (F.col("__dm") > F.col("__dv"))
+            & (dq > 0) & (dq < F.col("__dv"))
+        ) | (
+            (F.col("__dm") < F.col("__dv")) & (dq > F.col("__dv"))
+        )
+        hits = (
+            pts.join(
+                cb,
+                (F.col("x") >= F.col("__bx0")) & (F.col("x") <= F.col("__bx1"))
+                & (F.col("y") >= F.col("__by0")) & (F.col("y") <= F.col("__by1")),
+            )
+            .filter(
+                (F.col("id") != F.col("a")) & (F.col("id") != F.col("b"))
+                & (F.col("id") != F.col("c"))
+            )
+            .withColumn(
+                "__d2",
+                (F.col("x") - F.col("ccx")) ** 2 + (F.col("y") - F.col("ccy")) ** 2,
+            )
+            .filter(
+                strict_in
+                | (on_circle & ((q_lex > F.col("__vmax")) | arc_hit))
+            )
+            .localCheckpoint(eager=False)
+        )
+        refuted = hits.select("cell", "a", "b", "c").distinct()
+        verified = cands.join(refuted, ["cell", "a", "b", "c"], "left_anti")
+        emitted.append(verified.select(*_TRI_COLS))
+        # open points whose every candidate verified -> closed
+        ref_ids = (
+            refuted.select(F.explode(F.array("a", "b", "c")).alias("id")).distinct()
+        )
+        # lazy checkpoint: the fused open_info collect below materializes
+        # it in the same job AND returns the active-cell set the
+        # build_round at the loop bottom needs (r6: one driver job where
+        # count + a separate semi-join collect used to run)
+        open_df = open_df.join(ref_ids, "id", "left_semi").localCheckpoint(
+            eager=False
+        )
+        n_open, act_cells = open_info(open_df)
+        open_trace.append(n_open)
+        witness_rounds += 1
+        if n_open == 0:
+            break
+        wnd = Window.partitionBy("cell", "a", "b", "c").orderBy("__d2", "id")
+        new_w = (
+            hits.withColumn("__rk", F.row_number().over(wnd))
+            .filter(F.col("__rk") <= WITNESSES_PER_CAND)
+            .select("cell", "id", "x", "y")
+            .distinct()
+        )
+        witnesses = (
+            new_w if witnesses is None
+            else witnesses.unionByName(new_w).distinct()
+        ).localCheckpoint(eager=False)
+        rounds += 1
+        out = build_round(open_df, halo, False, act=act_cells)
+        emitted.append(out.filter(F.col("kind") == 0).select(*_TRI_COLS))
+        open_df = out.filter(F.col("kind") == 1).select(F.col("a").alias("id"))
     full = halo >= cps
     last_build_info = {
         "mode": "partitioned", "halo": halo, "retries": rounds - 1,
@@ -1117,7 +974,7 @@ def delaunay_triangles(
     # diverged at the last bit (ADVICE r4 #1) — same single shuffle as
     # distinct()
     return tris.groupBy("a", "b", "c").agg(
-        *[F.first(c).alias(c) for c in TRI_COLS if c not in ("a", "b", "c")]
+        *[F.first(c).alias(c) for c in _TRI_COLS if c not in ("a", "b", "c")]
     )
 
 

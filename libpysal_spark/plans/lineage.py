@@ -82,22 +82,15 @@ def write_with_lineage(
         for r in todo.groupBy(partition_col).agg(*_checksum_cols(df, partition_col)).collect()
     }
     if stats:
-        spark = df.sparkSession
-        prev_pom = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         # resume: replace only the partitions being (re)written;
-        # overwrite: static mode wipes the whole dataset first.
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode",
-            "dynamic" if mode == "resume" else "static",
+        # overwrite: static mode wipes the whole dataset first. A writer
+        # option, so the session conf is never touched.
+        (
+            todo.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic" if mode == "resume" else "static")
+            .partitionBy(partition_col)
+            .parquet(path)
         )
-        try:
-            (
-                todo.write.mode("overwrite")
-                .partitionBy(partition_col)
-                .parquet(path)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_pom)
     todo.unpersist()
     now = time.time()
     for k, v in stats.items():

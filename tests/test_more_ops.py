@@ -1,8 +1,6 @@
 """Raster, spint (ODW/netW/vecW), sphere, adaptive kernel, coplanar, IO."""
 
 import math
-import os
-import tempfile
 
 import numpy as np
 import pytest
@@ -13,7 +11,7 @@ from libpysal_spark.io.weights_io import (
     read_gal, read_gwt, read_parquet, write_gal, write_gwt, write_parquet,
 )
 from libpysal_spark.functions.sphere import arc_knn, chord_to_arcdist, haversine_expr
-from libpysal_spark.operators.distance import adaptive_kernel, knn_table, unique_site_cliques
+from libpysal_spark.operators.distance import adaptive_kernel, unique_site_cliques
 from libpysal_spark.operators.lattice import lat2w
 from libpysal_spark.operators.raster import raster_contiguity
 from libpysal_spark.operators.spint import netw, odw, vecw
