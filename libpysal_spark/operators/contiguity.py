@@ -25,7 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from libpysal_spark.graph import Graph, resolve_isolates
+from libpysal_spark.graph import Graph, _real_edges, resolve_isolates
+from libpysal_spark.tiling import polygon_cells
 
 
 def _vertex_table(polygons: DataFrame) -> DataFrame:
@@ -155,22 +156,7 @@ def _segments_intersect() -> F.Column:
 
 def _bbox_candidates(polygons: DataFrame, cell_size: float) -> DataFrame:
     """Unordered candidate polygon pairs via bbox-cell cover join."""
-    from libpysal_spark.tiling import pack_cell
-
-    s = float(cell_size)
-    bbox = polygons.select(
-        "id",
-        "vertices",
-        F.floor(F.array_min(F.transform("vertices", lambda v: v["x"])) / s).alias("cx0"),
-        F.floor(F.array_max(F.transform("vertices", lambda v: v["x"])) / s).alias("cx1"),
-        F.floor(F.array_min(F.transform("vertices", lambda v: v["y"])) / s).alias("cy0"),
-        F.floor(F.array_max(F.transform("vertices", lambda v: v["y"])) / s).alias("cy1"),
-    )
-    covered = (
-        bbox.withColumn("cx", F.explode(F.sequence("cx0", "cx1")))
-        .withColumn("cy", F.explode(F.sequence("cy0", "cy1")))
-        .select("id", "vertices", pack_cell(F.col("cx"), F.col("cy")).alias("cell"))
-    )
+    covered = polygon_cells(polygons, cell_size)
     a = covered.select("cell", F.col("id").alias("focal"), F.col("vertices").alias("va"))
     b = covered.select("cell", F.col("id").alias("neighbor"), F.col("vertices").alias("vb"))
     return (
@@ -269,99 +255,13 @@ def fuzzy_contiguity(polygons: DataFrame, cell_size: float) -> Graph:
     Buffering (the reference's ``buffering=True``) is the caller's concern:
     pass pre-buffered vertex rings.
     """
-    s = float(cell_size)
-    bbox = polygons.select(
-        "id",
-        "vertices",
-        F.floor(F.array_min(F.transform("vertices", lambda v: v["x"])) / s).alias("cx0"),
-        F.floor(F.array_max(F.transform("vertices", lambda v: v["x"])) / s).alias("cx1"),
-        F.floor(F.array_min(F.transform("vertices", lambda v: v["y"])) / s).alias("cy0"),
-        F.floor(F.array_max(F.transform("vertices", lambda v: v["y"])) / s).alias("cy1"),
-    )
-    from libpysal_spark.tiling import pack_cell
-
-    covered = (
-        bbox.withColumn("cx", F.explode(F.sequence("cx0", "cx1")))
-        .withColumn("cy", F.explode(F.sequence("cy0", "cy1")))
-        .select("id", "vertices", pack_cell(F.col("cx"), F.col("cy")).alias("cell"))
-    )
-    a = covered.select(
-        F.col("cell"), F.col("id").alias("focal"), F.col("vertices").alias("va")
-    )
-    b = covered.select(
-        F.col("cell"), F.col("id").alias("neighbor"), F.col("vertices").alias("vb")
-    )
-    cand = (
-        a.join(b, "cell")
-        .filter(F.col("focal") < F.col("neighbor"))
-        .select("focal", "neighbor", "va", "vb")
-        .distinct()
-        # consumed by BOTH the segment-crossing and containment branches —
-        # a lazy local checkpoint materializes the candidate join once; the
-        # context cleaner reclaims it when the plans are dropped (r6: the
-        # former Graph-lifetime persist pin evaporated before first use in
-        # the Graph(...).edges pattern)
-        .localCheckpoint(eager=False)
-    )
-
-    def segs(col, out_prefix):
-        z = F.explode(
-            F.arrays_zip(
-                F.slice(col, 1, F.size(col) - 1).alias("p"),
-                F.slice(col, 2, F.size(col) - 1).alias("q"),
-            )
-        )
-        return z
-
-    # segment-pair crossing test
-    sa = cand.select(
-        "focal", "neighbor", "vb",
-        segs(F.col("va"), "a").alias("sa"),
-    ).select(
-        "focal", "neighbor", "vb",
-        F.col("sa.p.x").alias("x1"), F.col("sa.p.y").alias("y1"),
-        F.col("sa.q.x").alias("x2"), F.col("sa.q.y").alias("y2"),
-    )
-    sab = sa.select(
-        "focal", "neighbor", "x1", "y1", "x2", "y2",
-        segs(F.col("vb"), "b").alias("sb"),
-    ).select(
-        "focal", "neighbor", "x1", "y1", "x2", "y2",
-        F.col("sb.p.x").alias("x3"), F.col("sb.p.y").alias("y3"),
-        F.col("sb.q.x").alias("x4"), F.col("sb.q.y").alias("y4"),
-    )
-    crossing = (
-        sab.filter(_segments_intersect()).select("focal", "neighbor").distinct()
-    )
-
-    # vertex-containment test (first vertex of each inside the other), via
-    # even-odd crossing count as a higher-order aggregate over the ring
-    def inside(pt_x, pt_y, ring):
-        pairs = F.arrays_zip(
-            F.slice(ring, 1, F.size(ring) - 1).alias("p"),
-            F.slice(ring, 2, F.size(ring) - 1).alias("q"),
-        )
-        crossings = F.size(
-            F.filter(
-                pairs,
-                lambda s: ((s["p"]["y"] > pt_y) != (s["q"]["y"] > pt_y))
-                & (
-                    pt_x
-                    < (s["q"]["x"] - s["p"]["x"])
-                    * (pt_y - s["p"]["y"])
-                    / (s["q"]["y"] - s["p"]["y"])
-                    + s["p"]["x"]
-                ),
-            )
-        )
-        return crossings % 2 == 1
-
-    contain = cand.filter(
-        inside(F.col("va")[0]["x"], F.col("va")[0]["y"], F.col("vb"))
-        | inside(F.col("vb")[0]["x"], F.col("vb")[0]["y"], F.col("va"))
-    ).select("focal", "neighbor")
-
-    half = crossing.unionByName(contain).distinct()
+    # consumed by BOTH the segment-crossing and containment branches —
+    # a lazy local checkpoint materializes the candidate join once; the
+    # context cleaner reclaims it when the plans are dropped (r6: the
+    # former Graph-lifetime persist pin evaporated before first use in
+    # the Graph(...).edges pattern)
+    cand = _bbox_candidates(polygons, cell_size).localCheckpoint(eager=False)
+    half = _pairs_intersecting(cand)
     pairs = half.unionByName(
         half.select(F.col("neighbor").alias("focal"), F.col("focal").alias("neighbor"))
     ).withColumn("weight", F.lit(1.0))
@@ -508,32 +408,17 @@ def nonplanar_neighbors(
         polygons.join(islands, "id", "left_semi"), distance
     )
 
-    s = float(cell_size)
-
-    def covered(polys: DataFrame, id_alias: str, v_alias: str) -> DataFrame:
-        from libpysal_spark.tiling import pack_cell
-
-        bbox = polys.select(
-            F.col("id").alias(id_alias),
-            F.col("vertices").alias(v_alias),
-            F.floor(F.array_min(F.transform("vertices", lambda v: v["x"])) / s).alias("cx0"),
-            F.floor(F.array_max(F.transform("vertices", lambda v: v["x"])) / s).alias("cx1"),
-            F.floor(F.array_min(F.transform("vertices", lambda v: v["y"])) / s).alias("cy0"),
-            F.floor(F.array_max(F.transform("vertices", lambda v: v["y"])) / s).alias("cy1"),
-        )
-        return (
-            bbox.withColumn("cx", F.explode(F.sequence("cx0", "cx1")))
-            .withColumn("cy", F.explode(F.sequence("cy0", "cy1")))
-            .select(id_alias, v_alias, pack_cell(F.col("cx"), F.col("cy")).alias("cell"))
-        )
-
     # islands are small BY CONSTRUCTION in real data (they are the repair
     # set); broadcast only while that holds — a pathological all-island
     # input falls back to the plain hash join rather than OOMing the driver
-    a = covered(isl_polys, "focal", "va")
+    a = polygon_cells(isl_polys, cell_size).select(
+        F.col("id").alias("focal"), F.col("vertices").alias("va"), "cell"
+    )
     if islands.count() <= 100_000:
         a = F.broadcast(a)
-    b = covered(polygons, "neighbor", "vb")
+    b = polygon_cells(polygons, cell_size).select(
+        F.col("id").alias("neighbor"), F.col("vertices").alias("vb"), "cell"
+    )
     cand = (
         a.join(b, "cell")
         .filter(F.col("focal") != F.col("neighbor"))
@@ -548,9 +433,7 @@ def nonplanar_neighbors(
         .distinct()
         .withColumn("weight", F.lit(1.0))
     )
-    kept = edges.filter(
-        ~((F.col("focal") == F.col("neighbor")) & (F.col("weight") == 0.0))
-    )
+    kept = _real_edges(edges)
     all_ids = edges.select(F.col("focal").alias("id")).distinct()
     merged = (
         kept.select("focal", "neighbor", "weight")

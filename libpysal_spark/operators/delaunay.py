@@ -1347,6 +1347,52 @@ def voronoi_alpha_clip_areas(
     )
 
 
+def _triangle_sides(tris: DataFrame) -> DataFrame:
+    """(ccx, ccy, u, v, ux, uy, vx, vy, ox, oy): each triangle exploded into
+    its 3 sides, keeping the circumcenter and the OPPOSITE vertex (needed to
+    orient a hull ray outward)."""
+    return tris.select(
+        "ccx", "ccy",
+        F.explode(
+            F.array(
+                F.struct(
+                    F.col("a").alias("u"), F.col("b").alias("v"),
+                    F.col("ax").alias("ux"), F.col("ay").alias("uy"),
+                    F.col("bx").alias("vx"), F.col("by").alias("vy"),
+                    F.col("cx").alias("ox"), F.col("cy").alias("oy"),
+                ),
+                F.struct(
+                    F.col("b").alias("u"), F.col("c").alias("v"),
+                    F.col("bx").alias("ux"), F.col("by").alias("uy"),
+                    F.col("cx").alias("vx"), F.col("cy").alias("vy"),
+                    F.col("ax").alias("ox"), F.col("ay").alias("oy"),
+                ),
+                F.struct(
+                    F.col("a").alias("u"), F.col("c").alias("v"),
+                    F.col("ax").alias("ux"), F.col("ay").alias("uy"),
+                    F.col("cx").alias("vx"), F.col("cy").alias("vy"),
+                    F.col("bx").alias("ox"), F.col("by").alias("oy"),
+                ),
+            )
+        ).alias("e"),
+    ).select("ccx", "ccy", "e.*")
+
+
+def _hull_ray_end(ccx, ccy, ox, oy, b) -> tuple[F.Column, F.Column]:
+    """Far end of the dual ray of hull side (u, v): from the circumcenter
+    (ccx, ccy), perpendicular to (u, v), oriented away from the opposite
+    vertex (ox, oy). The ray is a finite stand-in of length 4x the diagonal
+    of the point bbox ``b`` — exact for any clip region within the extent."""
+    far = 4.0 * (((b.x1 - b.x0) ** 2 + (b.y1 - b.y0) ** 2) ** 0.5 or 1.0)
+    mx = (F.col("ux") + F.col("vx")) / 2.0
+    my = (F.col("uy") + F.col("vy")) / 2.0
+    px = F.col("vy") - F.col("uy")
+    py = F.col("ux") - F.col("vx")
+    plen = F.sqrt(px * px + py * py)
+    sign = F.when((px * (mx - ox) + py * (my - oy)) >= 0, 1.0).otherwise(-1.0)
+    return ccx + sign * px / plen * F.lit(far), ccy + sign * py / plen * F.lit(far)
+
+
 def voronoi_polygons(
     points: DataFrame, cells_per_side: int = 1, clip: str | list | None = None
 ) -> DataFrame:
@@ -1385,31 +1431,7 @@ def voronoi_polygons(
     )
     # boundary (once-used) edges with their single triangle's circumcenter,
     # primal endpoints and the opposite vertex (for outward ray orientation)
-    e3 = tris.select(
-        "ccx", "ccy",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("a").alias("u"), F.col("b").alias("v"),
-                    F.col("ax").alias("ux"), F.col("ay").alias("uy"),
-                    F.col("bx").alias("vx"), F.col("by").alias("vy"),
-                    F.col("cx").alias("ox"), F.col("cy").alias("oy"),
-                ),
-                F.struct(
-                    F.col("b").alias("u"), F.col("c").alias("v"),
-                    F.col("bx").alias("ux"), F.col("by").alias("uy"),
-                    F.col("cx").alias("vx"), F.col("cy").alias("vy"),
-                    F.col("ax").alias("ox"), F.col("ay").alias("oy"),
-                ),
-                F.struct(
-                    F.col("a").alias("u"), F.col("c").alias("v"),
-                    F.col("ax").alias("ux"), F.col("ay").alias("uy"),
-                    F.col("cx").alias("vx"), F.col("cy").alias("vy"),
-                    F.col("bx").alias("ox"), F.col("by").alias("oy"),
-                ),
-            )
-        ).alias("e"),
-    ).select("ccx", "ccy", "e.*")
+    e3 = _triangle_sides(tris)
     grouped = e3.groupBy("u", "v").agg(
         F.count("*").alias("__n"),
         F.first("ccx").alias("ccx"), F.first("ccy").alias("ccy"),
@@ -1431,17 +1453,9 @@ def voronoi_polygons(
             F.min("x").alias("x0"), F.max("x").alias("x1"),
             F.min("y").alias("y0"), F.max("y").alias("y1"),
         ).first()
-        diag = ((b.x1 - b.x0) ** 2 + (b.y1 - b.y0) ** 2) ** 0.5 or 1.0
-        far = 4.0 * diag
         # far endpoint of each boundary ray, attributed to BOTH endpoints
-        mx = (F.col("ux") + F.col("vx")) / 2.0
-        my = (F.col("uy") + F.col("vy")) / 2.0
-        px = F.col("vy") - F.col("uy")
-        py = F.col("ux") - F.col("vx")
-        plen = F.sqrt(px * px + py * py)
-        sign = F.when((px * (mx - F.col("ox")) + py * (my - F.col("oy"))) >= 0, 1.0).otherwise(-1.0)
-        fx = (F.col("ccx") + sign * px / plen * F.lit(far)).alias("ccx")
-        fy = (F.col("ccy") + sign * py / plen * F.lit(far)).alias("ccy")
+        fx, fy = _hull_ray_end(F.col("ccx"), F.col("ccy"), F.col("ox"), F.col("oy"), b)
+        fx, fy = fx.alias("ccx"), fy.alias("ccy")
         ray_pts = boundary.select(F.col("u").alias("id"), fx, fy).unionByName(
             boundary.select(F.col("v").alias("id"), fx, fy)
         )
@@ -1593,36 +1607,8 @@ def voronoi_weights(
         F.min("x").alias("x0"), F.max("x").alias("x1"),
         F.min("y").alias("y0"), F.max("y").alias("y1"),
     ).first()
-    diag = ((b.x1 - b.x0) ** 2 + (b.y1 - b.y0) ** 2) ** 0.5 or 1.0
-    far = 4.0 * diag
 
-    # explode each triangle into its 3 edges, keeping the circumcenter and
-    # the OPPOSITE vertex (needed to orient the hull ray outward)
-    e3 = tris.select(
-        "ccx", "ccy",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("a").alias("u"), F.col("b").alias("v"),
-                    F.col("ax").alias("ux"), F.col("ay").alias("uy"),
-                    F.col("bx").alias("vx"), F.col("by").alias("vy"),
-                    F.col("cx").alias("ox"), F.col("cy").alias("oy"),
-                ),
-                F.struct(
-                    F.col("b").alias("u"), F.col("c").alias("v"),
-                    F.col("bx").alias("ux"), F.col("by").alias("uy"),
-                    F.col("cx").alias("vx"), F.col("cy").alias("vy"),
-                    F.col("ax").alias("ox"), F.col("ay").alias("oy"),
-                ),
-                F.struct(
-                    F.col("a").alias("u"), F.col("c").alias("v"),
-                    F.col("ax").alias("ux"), F.col("ay").alias("uy"),
-                    F.col("cx").alias("vx"), F.col("cy").alias("vy"),
-                    F.col("bx").alias("ox"), F.col("by").alias("oy"),
-                ),
-            )
-        ).alias("e"),
-    ).select("ccx", "ccy", "e.*")
+    e3 = _triangle_sides(tris)
 
     grouped = e3.groupBy("u", "v").agg(
         F.count("*").alias("__nt"),
@@ -1632,16 +1618,8 @@ def voronoi_weights(
     )
     c1 = F.col("__cs")[0]
     c2 = F.col("__cs")[1]
-    mx = (F.col("ux") + F.col("vx")) / 2.0
-    my = (F.col("uy") + F.col("vy")) / 2.0
-    # hull edge: dual ray from the circumcenter, perpendicular to (u, v),
-    # oriented away from the opposite vertex; finite stand-in of length `far`
-    px = F.col("vy") - F.col("uy")
-    py = F.col("ux") - F.col("vx")
-    plen = F.sqrt(px * px + py * py)
-    sign = F.when((px * (mx - c1["ox"]) + py * (my - c1["oy"])) >= 0, 1.0).otherwise(-1.0)
-    rayx = c1["ccx"] + sign * px / plen * F.lit(far)
-    rayy = c1["ccy"] + sign * py / plen * F.lit(far)
+    # hull edge: its dual is the ray from its one circumcenter
+    rayx, rayy = _hull_ray_end(c1["ccx"], c1["ccy"], c1["ox"], c1["oy"], b)
     p1x = F.when(F.col("__nt") >= 2, c2["ccx"]).otherwise(rayx)
     p1y = F.when(F.col("__nt") >= 2, c2["ccy"]).otherwise(rayy)
     if clip == "extent":

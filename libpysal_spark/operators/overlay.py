@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from libpysal_spark.tiling import polygon_cells
+
 
 def dissolve_boundary(polygons: DataFrame, labels: DataFrame) -> DataFrame:
     """Boundary segments of each label-group's merged region.
@@ -297,31 +299,13 @@ def overlay(
             .agg(F.sum("area").alias("area"))
             .filter(F.col("area") > min_area)
         )
-    from libpysal_spark.tiling import pack_cell
-
-    s = float(cell_size)
-
-    def covered(polys, id_alias, v_alias):
-        bbox = polys.select(
-            F.col("id").alias(id_alias),
-            F.col("vertices").alias(v_alias),
-            F.floor(F.array_min(F.transform("vertices", lambda v: v["x"])) / s).alias("cx0"),
-            F.floor(F.array_max(F.transform("vertices", lambda v: v["x"])) / s).alias("cx1"),
-            F.floor(F.array_min(F.transform("vertices", lambda v: v["y"])) / s).alias("cy0"),
-            F.floor(F.array_max(F.transform("vertices", lambda v: v["y"])) / s).alias("cy1"),
-        )
-        return (
-            bbox.withColumn("cx", F.explode(F.sequence("cx0", "cx1")))
-            .withColumn("cy", F.explode(F.sequence("cy0", "cy1")))
-            .select(id_alias, v_alias, pack_cell(F.col("cx"), F.col("cy")).alias("cell"))
-        )
-
-    cand = (
-        covered(a_polys, "a_id", "va")
-        .join(covered(b_polys, "b_id", "vb"), "cell")
-        .select("a_id", "b_id", "va", "vb")
-        .distinct()
+    a_cells = polygon_cells(a_polys, cell_size).select(
+        F.col("id").alias("a_id"), F.col("vertices").alias("va"), "cell"
     )
+    b_cells = polygon_cells(b_polys, cell_size).select(
+        F.col("id").alias("b_id"), F.col("vertices").alias("vb"), "cell"
+    )
+    cand = a_cells.join(b_cells, "cell").select("a_id", "b_id", "va", "vb").distinct()
 
     from libpysal_spark.functions.clip2d import batch_clip_areas, rings_from_arrow
 

@@ -25,25 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from libpysal_spark.tiling import ensure_min_parallelism, pack_cell
-
-
-def _polygon_cells(polygons: DataFrame, cell_size: float) -> DataFrame:
-    """Explode each polygon to the packed cells covering its bbox."""
-    s = float(cell_size)
-    bbox = polygons.select(
-        "id",
-        "vertices",
-        F.floor(F.array_min(F.transform("vertices", lambda v: v["x"])) / s).alias("cx0"),
-        F.floor(F.array_max(F.transform("vertices", lambda v: v["x"])) / s).alias("cx1"),
-        F.floor(F.array_min(F.transform("vertices", lambda v: v["y"])) / s).alias("cy0"),
-        F.floor(F.array_max(F.transform("vertices", lambda v: v["y"])) / s).alias("cy1"),
-    )
-    return (
-        bbox.withColumn("cx", F.explode(F.sequence("cx0", "cx1")))
-        .withColumn("cy", F.explode(F.sequence("cy0", "cy1")))
-        .select("id", "vertices", pack_cell(F.col("cx"), F.col("cy")).alias("cell"))
-    )
+from libpysal_spark.tiling import ensure_min_parallelism, pack_cell, polygon_cells
 
 
 def pip_join(
@@ -62,7 +44,7 @@ def pip_join(
         "y",
         pack_cell(F.floor(F.col("x") / s), F.floor(F.col("y") / s)).alias("cell"),
     )
-    polys = _polygon_cells(polygons, s).withColumnRenamed("id", "polygon_id")
+    polys = polygon_cells(polygons, s).withColumnRenamed("id", "polygon_id")
     cand = pts.join(polys, "cell").select("point_id", "x", "y", "polygon_id", "vertices")
 
     # explode boundary segments; even-odd ray casting toward +x

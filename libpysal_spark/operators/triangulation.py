@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from libpysal_spark.graph import Graph, resolve_isolates
+from libpysal_spark.graph import Graph, _real_edges, resolve_isolates
 from libpysal_spark.operators.distance import candidate_pairs
 from libpysal_spark.tiling import pack_cell
 
@@ -126,9 +126,7 @@ def _delaunay_candidates(points: DataFrame, cells_per_side: int = 1) -> DataFram
     from libpysal_spark.operators.delaunay import delaunay
 
     g = delaunay(points, cells_per_side=cells_per_side)
-    e = g.edges.filter(
-        ~((F.col("focal") == F.col("neighbor")) & (F.col("weight") == 0.0))
-    ).select("focal", "neighbor")
+    e = _real_edges(g.edges).select("focal", "neighbor")
     pf = points.select(
         F.col("id").alias("focal"), F.col("x").alias("x_f"), F.col("y").alias("y_f")
     )

@@ -130,3 +130,23 @@ def with_cells(
         .withColumn(f"{prefix}_y", cy)
         .withColumn(prefix, pack_cell(F.col(f"{prefix}_x"), F.col(f"{prefix}_y")))
     )
+
+
+def polygon_cells(polygons: DataFrame, size: float) -> DataFrame:
+    """(id, vertices, cell): each polygon exploded to the packed cells covering
+    its bbox — the polygon side of every grid-tiling join (point-in-polygon,
+    polygon-pair candidates, overlay)."""
+    s = float(size)
+    bbox = polygons.select(
+        "id",
+        "vertices",
+        F.floor(F.array_min(F.transform("vertices", lambda v: v["x"])) / s).alias("cx0"),
+        F.floor(F.array_max(F.transform("vertices", lambda v: v["x"])) / s).alias("cx1"),
+        F.floor(F.array_min(F.transform("vertices", lambda v: v["y"])) / s).alias("cy0"),
+        F.floor(F.array_max(F.transform("vertices", lambda v: v["y"])) / s).alias("cy1"),
+    )
+    return (
+        bbox.withColumn("cx", F.explode(F.sequence("cx0", "cx1")))
+        .withColumn("cy", F.explode(F.sequence("cy0", "cy1")))
+        .select("id", "vertices", pack_cell(F.col("cx"), F.col("cy")).alias("cell"))
+    )

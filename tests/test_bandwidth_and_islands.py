@@ -62,3 +62,22 @@ def test_fuzzy_contiguity_diamonds(spark):
     n, _ = g.neighbor_dicts()
     assert set(n[4]) == {1, 3, 5, 7}  # rook: diamonds overlap only axially
     assert set(n[0]) == {1, 3}
+
+
+def test_fuzzy_contiguity_containment(spark):
+    """No boundaries cross here, so only the containment branch can link."""
+    shapes = {
+        0: [(0, 0), (10, 0), (10, 10), (0, 10)],  # outer square
+        1: [(3, 3), (7, 3), (7, 7), (3, 7)],  # strictly inside 0
+        # two L-shapes with overlapping bboxes that do not touch
+        2: [(20, 0), (26, 0), (26, 2), (22, 2), (22, 6), (20, 6)],
+        3: [(23, 7), (27, 7), (27, 3), (29, 3), (29, 9), (23, 9)],
+        4: [(100, 100), (101, 100), (101, 101), (100, 101)],  # far away
+    }
+    rows = [
+        (i, [{"x": float(x), "y": float(y)} for x, y in ring + ring[:1]])
+        for i, ring in shapes.items()
+    ]
+    polys = spark.createDataFrame(rows, "id long, vertices array<struct<x: double, y: double>>")
+    n, _ = fuzzy_contiguity(polys, 1.0).neighbor_dicts()
+    assert n == {0: [1], 1: [0], 2: [], 3: [], 4: []}
